@@ -199,7 +199,9 @@ object Bench {
     // Nothing about what is timed changed.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERIES_OUT",
       "bench_queries.json")
-    try {
+    // JSON value naming the sidecar for the tail summary: null when the
+    // write below fails, so a tail-only reader never chases a stale file.
+    val queriesFile = try {
       val detail = timings.map { case (name, failed, ts, raw, loads, gcs) =>
         // True median: average the two middle elements for even run
         // counts (ts(size/2) alone reports the MAX of a 2-run sample).
@@ -222,8 +224,10 @@ object Bench {
           s""""high_state":$highState,"queries":$qs,"value":$total,""" +
           s""""calibration":$calibJson,"queries_detail":$detail}""")
           .getBytes("UTF-8"))
+      "\"" + outPath.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     } catch { case e: Throwable =>
       System.err.println(s"BENCH: could not write $outPath: ${e.getMessage}")
+      "null"
     }
     // Field order matters: the driver keeps only the tail of stdout, so the
     // headline total (and failure list) must come AFTER the long per-query
@@ -242,7 +246,7 @@ object Bench {
     // gc_total_ms ~ total wall flags memory pressure. queries_file names
     // the stable per-query sidecar (the full name→seconds map in contract
     // shape) so a tail-only reader knows where the complete record lives.
-    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failed,"load_med":$loadMed,"load_max":$loadMax,"gc_total_ms":$gcTotal,"calib_med":${fmt2(calibMed)},"high_state":$highState,"queries_file":"bench_queries.json","value":$total}""")
+    println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failed,"load_med":$loadMed,"load_max":$loadMax,"gc_total_ms":$gcTotal,"calib_med":${fmt2(calibMed)},"high_state":$highState,"queries_file":$queriesFile,"value":$total}""")
     spark.stop()
   }
 }

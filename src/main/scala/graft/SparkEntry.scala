@@ -4,11 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import java.sql.Timestamp
+
 import graft.dedup.Dedup
 import graft.enrich.Enrichment
 import graft.ops.{AsOfJoin, JoinOps, MergeOps, RangeJoin, ShapeOps, TextOps}
 import graft.sim.Similarity
-import graft.streaming.StreamingOps
+import graft.streaming.{StreamReplay, StreamingOps}
 import graft.text.{CorpusAssembly, TextAnalysis}
 
 /** Driver contract — one `queries` entry per implemented operator from
@@ -626,47 +628,18 @@ object SparkEntry {
     * approx_count_distinct stream could never give.
     */
   private def qStreamDistinct(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 for the WHOLE replay, batch prep included: state commits +
-    // sink writes dominate the stream side (register state is a few
-    // hundred rows per window), and the feed's orderBy at the session's
-    // 32 partitions made toLocalIterator schedule 32 serial fetch jobs —
-    // measured 2.1 s vs 0.6 s at width 2 (r13), pure harness overhead.
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      val src = t(s, dir, "events")
-        .select(col("ts"), col("user_id"))
-        .orderBy(col("ts"), col("user_id"))
-      val n = src.count()
-      val rows = src.toLocalIterator().asScala
-        .map(r => (r.getTimestamp(0), r.getLong(1)))
-      val mem = MemoryStream[(java.sql.Timestamp, Long)]
-      val regs = StreamingOps.streamingWindowedDistinct(
-        mem.toDF().toDF("ts", "user_id"), "ts", "user_id",
-        width = "1 hour", watermark = "2 hours")
-      val sink = "q_stream_distinct_sink"
-      val q = regs.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      try {
-        // ONE data batch (r13; was two): each extra micro-batch costs a
-        // full commit cycle (~0.7-1.2 s measured on this replay family —
-        // the r12 verdict's "micro-batch count" dial). Cross-batch state
-        // arrival stays covered where it belongs: StreamingOpsSpec /
-        // StreamStreamJoinSpec replay multi-batch with boundary-spanning
-        // keys; the registered query's oracle checks the finished result.
-        rows.grouped(math.max(2000, n.toInt + 1))
-          .foreach(batch => { mem.addData(batch.toSeq: _*); q.processAllAvailable() })
-      } finally q.stop()
-      graft.sketch.Sketches.hllEstimate(s.table(sink), Seq("window_start"))
-        .select(
-          date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("hll_estimate"))
-        .orderBy(col("window_start"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    val regs = StreamReplay.run(s, 2, "q_stream_distinct_sink", "complete") { feed =>
+      val mem = feed[(Timestamp, Long)](t(s, dir, "events")
+        .select(col("ts"), col("user_id")).orderBy(col("ts"), col("user_id")))
+      StreamingOps.streamingWindowedDistinct(mem.toDF().toDF("ts", "user_id"),
+        "ts", "user_id", width = "1 hour", watermark = "2 hours")
+    }
+    graft.sketch.Sketches.hllEstimate(regs, Seq("window_start"))
+      .select(
+        date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+        col("hll_estimate"))
+      .orderBy(col("window_start"))
   }
 
   /** Snapshot-to-snapshot corpus delta: a synthetic "next crawl" (every
@@ -1352,62 +1325,10 @@ object SparkEntry {
     * and the finished stream must equal the batch range-join oracle; on a
     * live stream the same plan's state is bounded by lookback + watermark.
     */
-  private def qStreamInterval(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 around the WHOLE replay (feed prep included — the r13
-    // toLocalIterator finding, see qStreamDistinct). Everything from the
-    // first eager step onward sits inside the restoring try: an exception
-    // anywhere must not leak width 2 into the shared session (ADVICE r13).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      val ev = t(s, dir, "events")
-      def side(typ: String) = ev.filter(col("event_type") === typ)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .orderBy(col("ts"), col("event_id"))
-      val clicks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val purchases = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-      val joined = StreamingOps.streamingIntervalJoin(
-          clicks.toDF().toDF("click_id", "user_id", "ts"),
-          purchases.toDF().toDF("purchase_id", "p_user", "p_ts", "amount"),
-          leftKey = "user_id", rightKey = "p_user", leftTs = "ts", rightTs = "p_ts",
-          lookback = "1 hour", watermarkDelay = "365 days")
-        .select(col("click_id"), col("purchase_id"),
-          round(col("amount"), 2).as("amount"))
-      val sink = "q_stream_interval_sink"
-      // Both sides enqueue BEFORE the query starts (r15): a stream-stream
-      // join buffers both inputs in state, so match results don't depend
-      // on which micro-batch carried which side — and each extra commit
-      // cycle costs ~0.5 s of state-store overhead on the replay harness.
-      // With a started query the ProcessingTime(0) trigger RACES the
-      // feed: partial-data micro-batches fire while toLocalIterator
-      // drains, so the commit-cycle count depended on host load (the r14
-      // driver pass read 6.5-8.3 s on this query vs 1.97 idle — three
-      // racy batches even on an idle host). Buffered-first, the replay is
-      // exactly one data micro-batch plus the engine's no-data watermark
-      // batch, deterministic by construction (StreamReplayBatchSpec pins
-      // it). Fine-grained incremental arrival (matches across batch
-      // boundaries) is pinned by StreamStreamJoinSpec.
-      def replay[T](typ: String, conv: org.apache.spark.sql.Row => T)(
-          add: Seq[T] => Unit): Unit =
-        side(typ).toLocalIterator().asScala.map(conv)
-          .grouped(1 << 20)
-          .foreach(b => add(b.toSeq))
-      replay("purchase",
-        r => (r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getDouble(3)))(
-        b => purchases.addData(b: _*))
-      replay("click",
-        r => (r.getLong(0), r.getLong(1), r.getTimestamp(2)))(
-        b => clicks.addData(b: _*))
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).orderBy(col("click_id"), col("purchase_id"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-  }
+  private def qStreamInterval(s: SparkSession, dir: String): DataFrame =
+    clickPurchaseReplay(s, dir, "q_stream_interval_sink", "inner",
+        watermarkDelay = "365 days", sentinels = false)
+      .orderBy(col("click_id"), col("purchase_id"))
 
   /** Stream-stream FULL OUTER interval join under the correctness gate —
     * completes the streaming join matrix (inner / left-outer /
@@ -1418,60 +1339,12 @@ object SparkEntry {
     * filtered by their negative ids. Must equal the batch full-outer
     * range-join oracle.
     */
-  private def qStreamFullOuter(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 around the WHOLE replay (feed prep included — the r13
-    // toLocalIterator finding, see qStreamDistinct); the restoring try
-    // opens right after the set so no eager step can leak the width
-    // (ADVICE r13).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      val ev = t(s, dir, "events")
-      def side(typ: String) = ev.filter(col("event_type") === typ)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .orderBy(col("ts"), col("event_id"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      def future(days: Int) = new java.sql.Timestamp(maxTs.getTime + days * 86400000L)
-      val clicks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val purchases = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-      val joined = StreamingOps.streamingIntervalJoin(
-          clicks.toDF().toDF("click_id", "user_id", "ts"),
-          purchases.toDF().toDF("purchase_id", "p_user", "p_ts", "amount"),
-          leftKey = "user_id", rightKey = "p_user", leftTs = "ts", rightTs = "p_ts",
-          lookback = "1 hour", watermarkDelay = "1 minute", joinType = "fullOuter")
-        .select(col("click_id"), col("purchase_id"),
-          round(col("amount"), 2).as("amount"))
-      val sink = "q_stream_full_outer_sink"
-      // Feed (data + sentinels) enqueues fully BEFORE the query starts —
-      // same determinism rationale as q_stream_interval (r15): no
-      // partial-batch race against the trigger, one data batch + the
-      // no-data watermark batch.
-      def replay[T](typ: String, conv: org.apache.spark.sql.Row => T)(
-          add: Seq[T] => Unit): Unit =
-        side(typ).toLocalIterator().asScala.map(conv)
-          .grouped(1 << 20)
-          .foreach(b => add(b.toSeq))
-      replay("purchase",
-        r => (r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getDouble(3)))(
-        b => purchases.addData(b: _*))
-      replay("click",
-        r => (r.getLong(0), r.getLong(1), r.getTimestamp(2)))(
-        b => clicks.addData(b: _*))
-      purchases.addData((-1L, -999L, future(100), 0.0))
-      clicks.addData((-1L, -998L, future(100)))
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink)
-        .filter(coalesce(col("click_id"), lit(0L)) >= 0 &&
-          coalesce(col("purchase_id"), lit(0L)) >= 0)
-        .orderBy(col("click_id").asc_nulls_first, col("purchase_id").asc_nulls_first)
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
-  }
+  private def qStreamFullOuter(s: SparkSession, dir: String): DataFrame =
+    clickPurchaseReplay(s, dir, "q_stream_full_outer_sink", "fullOuter",
+        watermarkDelay = "1 minute", sentinels = true)
+      .filter(coalesce(col("click_id"), lit(0L)) >= 0 &&
+        coalesce(col("purchase_id"), lit(0L)) >= 0)
+      .orderBy(col("click_id").asc_nulls_first, col("purchase_id").asc_nulls_first)
 
   /** Stream-stream LEFT OUTER interval join under the correctness gate:
     * every click, with its prior-hour purchases where they exist and
@@ -1482,73 +1355,53 @@ object SparkEntry {
     * filters them back out; the finished stream must equal the batch
     * left-outer range-join oracle.
     */
-  private def qStreamOuter(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
+  private def qStreamOuter(s: SparkSession, dir: String): DataFrame =
+    clickPurchaseReplay(s, dir, "q_stream_outer_sink", "leftOuter",
+        watermarkDelay = "1 minute", sentinels = true)
+      .filter(col("click_id") >= 0)
+      .orderBy(col("click_id"), col("purchase_id").asc_nulls_first)
+
+  /** The click/purchase stream-stream interval join replay shared by
+    * q_stream_interval, q_stream_outer and q_stream_full_outer: purchases
+    * in the hour before each click, both sides replayed in event-time
+    * order. The join buffers both inputs in state, so its matches do not
+    * depend on which micro-batch carried which side. Width 2, not cores:
+    * an OUTER stream-stream join keeps FOUR state stores per side per
+    * partition, and commit cycles, not data volume, dominate the replay.
+    * RocksDB state store measured here (round 8): 6.2 s vs 5.0 s for the
+    * default provider — JNI + per-batch snapshot overhead on a KB-scale
+    * state.
+    *
+    * With `sentinels`, one far-future row per side (negative ids: they
+    * match nothing real, and callers filter them from the sink read)
+    * pushes the global watermark — the MIN across inputs — past every
+    * join window, so unmatched outer rows flush before the read.
+    * Late-row filtering uses the PREVIOUS batch's watermark (still at the
+    * epoch), so sentinels riding the data batch drop nothing; the
+    * watermark takes effect at batch end and the engine's no-data
+    * micro-batch then evicts and emits the unmatched state.
+    */
+  private def clickPurchaseReplay(s: SparkSession, dir: String, sink: String,
+      joinType: String, watermarkDelay: String, sentinels: Boolean): DataFrame = {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 around the WHOLE replay (feed prep included — the r13
-    // toLocalIterator finding, see qStreamDistinct); restoring try opens
-    // right after the set (ADVICE r13).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
+    StreamReplay.run(s, 2, sink, "append") { feed =>
       val ev = t(s, dir, "events")
-      def side(typ: String) = ev.filter(col("event_type") === typ)
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"))
-        .orderBy(col("ts"), col("event_id"))
-      val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-      def future(days: Int) = new java.sql.Timestamp(maxTs.getTime + days * 86400000L)
-      val clicks = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val purchases = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
-      val joined = StreamingOps.streamingIntervalJoin(
+      def side(typ: String, cols: String*) = ev.filter(col("event_type") === typ)
+        .select(cols.map(col): _*).orderBy(col("ts"), col("event_id"))
+      val far = Option.when(sentinels)(new Timestamp(
+        ev.agg(max(col("ts"))).head().getTimestamp(0).getTime + 100L * 86400000L))
+      val purchases = feed[(Long, Long, Timestamp, Double)](
+        side("purchase", "event_id", "user_id", "ts", "value"),
+        far.map(ts => (-1L, -999L, ts, 0.0)).toSeq: _*)
+      val clicks = feed[(Long, Long, Timestamp)](
+        side("click", "event_id", "user_id", "ts"), far.map(ts => (-1L, -998L, ts)).toSeq: _*)
+      StreamingOps.streamingIntervalJoin(
           clicks.toDF().toDF("click_id", "user_id", "ts"),
           purchases.toDF().toDF("purchase_id", "p_user", "p_ts", "amount"),
           leftKey = "user_id", rightKey = "p_user", leftTs = "ts", rightTs = "p_ts",
-          lookback = "1 hour", watermarkDelay = "1 minute", joinType = "leftOuter")
-        .select(col("click_id"), col("purchase_id"),
-          round(col("amount"), 2).as("amount"))
-      val sink = "q_stream_outer_sink"
-      // Low width, not cores: a stream-stream OUTER join keeps FOUR state
-      // stores per side per partition, and commit cycles — not data
-      // volume — dominate this replay. State partition count is fixed at
-      // the first checkpoint; size it to key cardinality, not cores.
-      // RocksDB state store measured here (round 8): 6.2 s vs 5.0 s for the
-      // default in-memory provider — JNI + per-batch snapshot overhead on a
-      // KB-scale state. RocksDB pays off when per-partition state outgrows
-      // the heap (real deployments of THIS join shape), not in this replay.
-      // Real data AND the far-future sentinels enqueue before the query
-      // starts (r9: was three commit cycles — one per side plus the
-      // sentinel batch — each ~0.5 s of state-store overhead; r15 moved
-      // the start AFTER the feed so the trigger cannot race the
-      // toLocalIterator drain into load-dependent partial batches).
-      // Late-row filtering uses the PREVIOUS batch's watermark (still at
-      // the epoch), so sentinels riding the same batch drop nothing; the
-      // watermark takes effect at batch END and the engine's no-data
-      // micro-batch (noDataMicroBatches, on by default) then evicts and
-      // emits the unmatched left state — processAllAvailable blocks
-      // through it. Sentinel keys are negative — they match nothing real
-      // and are filtered from the sink read. Incremental cross-batch
-      // arrival is pinned by StreamStreamJoinSpec.
-      def replay[T](typ: String, conv: org.apache.spark.sql.Row => T)(
-          add: Seq[T] => Unit): Unit =
-        side(typ).toLocalIterator().asScala.map(conv)
-          .grouped(1 << 20)
-          .foreach(b => add(b.toSeq))
-      replay("purchase",
-        r => (r.getLong(0), r.getLong(1), r.getTimestamp(2), r.getDouble(3)))(
-        b => purchases.addData(b: _*))
-      replay("click",
-        r => (r.getLong(0), r.getLong(1), r.getTimestamp(2)))(
-        b => clicks.addData(b: _*))
-      purchases.addData((-1L, -999L, future(100), 0.0))
-      clicks.addData((-1L, -998L, future(100)))
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).filter(col("click_id") >= 0)
-        .orderBy(col("click_id"), col("purchase_id").asc_nulls_first)
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+          lookback = "1 hour", watermarkDelay = watermarkDelay, joinType = joinType)
+        .select(col("click_id"), col("purchase_id"), round(col("amount"), 2).as("amount"))
+    }
   }
 
   /** Regex field extraction from the JSON-ish props string. */
@@ -1564,39 +1417,17 @@ object SparkEntry {
     * must equal the batch join oracle.
     */
   private def qStreamEnrich(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // The WHOLE replay runs at width 4, batch prep included: the feed's
-    // orderBy otherwise sorts into the session's 32 partitions and
-    // toLocalIterator then schedules one serial fetch job per partition —
-    // pure harness overhead. The stream (started inside this scope)
-    // snapshots the same width for its per-batch exchanges.
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val src = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"))
-        .orderBy(col("event_id"))
-      val n = src.count()
-      val dim = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
-      val mem = MemoryStream[(Long, Long)]
-      val enriched = StreamingOps.streamStaticEnrich(
+    StreamReplay.run(s, 4, "q_stream_enrich_sink", "append") { feed =>
+      val mem = feed[(Long, Long)](t(s, dir, "events")
+        .select(col("event_id"), col("user_id")).orderBy(col("event_id")))
+      StreamingOps.streamStaticEnrich(
           mem.toDF().toDF("event_id", "user_id")
             .withColumn("n_nationkey", col("user_id") % 25),
-          dim, Seq("n_nationkey"))
+          t(s, dir, "nation").select(col("n_nationkey"), col("n_name")),
+          Seq("n_nationkey"))
         .select(col("event_id"), col("user_id"), col("n_name"))
-      val sink = "q_stream_enrich_sink"
-      val q = enriched.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        src.toLocalIterator().asScala.map(r => (r.getLong(0), r.getLong(1)))
-          .grouped(math.max(2000, n.toInt + 1))
-          .foreach(batch => { mem.addData(batch.toSeq: _*); q.processAllAvailable() })
-      } finally q.stop()
-      s.table(sink).orderBy(col("event_id"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    }.orderBy(col("event_id"))
   }
 
   /** Streaming temporal enrichment under the correctness gate: events
@@ -1606,86 +1437,40 @@ object SparkEntry {
     * per micro-batch. Hash-oracled against the batch interval join.
     */
   private def qStreamAsof(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 4 around the WHOLE replay: stateless per micro-batch, but the
-    // SCD-2 dim build + feed orderBy otherwise run at the session's 32
-    // partitions and toLocalIterator schedules one serial fetch job per
-    // partition (the r13 finding, see qStreamDistinct).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    StreamReplay.run(s, 4, "q_stream_asof_sink", "append") { feed =>
       val ev = t(s, dir, "events")
       val dim = ops.EventOps.scd2Intervals(
           ev, "user_id", "ts", "event_id", "event_type")
         .select(col("user_id").as("d_user"),
           col("event_type").as("state_type"),
           col("valid_from_ts"), col("valid_to_ts"))
-      val src = ev.select(col("event_id"), col("user_id"), col("ts"))
-        .orderBy(col("event_id"))
-      val n = src.count()
-      val rows = src.toLocalIterator().asScala
-        .map(r => (r.getLong(0), r.getLong(1), r.getTimestamp(2)))
-      val mem = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val enriched = StreamingOps.streamStaticTemporalEnrich(
+      val mem = feed[(Long, Long, Timestamp)](
+        ev.select(col("event_id"), col("user_id"), col("ts")).orderBy(col("event_id")))
+      StreamingOps.streamStaticTemporalEnrich(
           mem.toDF().toDF("event_id", "user_id", "ts"), dim,
           Seq("user_id" -> "d_user"), "ts", "valid_from_ts", "valid_to_ts")
         .select(col("event_id"), col("user_id"), col("state_type"),
           col("valid_to_ts").isNull.as("is_current"))
-      val sink = "q_stream_asof_sink"
-      val q = enriched.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        rows.grouped(math.max(2000, n.toInt + 1))
-          .foreach(batch => { mem.addData(batch.toSeq: _*); q.processAllAvailable() })
-      } finally q.stop()
-      s.table(sink).orderBy(col("event_id"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    }.orderBy(col("event_id"))
   }
 
   /** Structured Streaming under the correctness gate: the events table is
     * replayed through a MemoryStream in micro-batches into the SAME
     * watermarked tumbling-agg plan the batch query uses; the finished
-    * stream must hash-match the DuckDB batch oracle. The replay feed is
-    * the harness, not an operator — `toLocalIterator` keeps the driver
-    * footprint at ONE partition of the sorted table, not the table.
+    * stream must hash-match the DuckDB batch oracle.
     */
   private def qStreamTumbling(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 around the WHOLE replay: state-store task count is pinned
-    // at query start from spark.sql.shuffle.partitions (2 keeps the
-    // per-micro-batch commit overhead minimal for KB-scale state), and
-    // the feed prep at low width avoids the 32 serial toLocalIterator
-    // fetch jobs (the r13 finding, see qStreamDistinct).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      val src = t(s, dir, "events")
+    StreamReplay.run(s, 2, "q_stream_tumbling_sink", "complete") { feed =>
+      val mem = feed[(Timestamp, String, Double)](t(s, dir, "events")
         .select(col("ts"), col("event_type"), col("value"))
-        .orderBy(col("ts"), col("event_type"))
-      val n = src.count()
-      val rows = src.toLocalIterator().asScala
-        .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2)))
-      val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-      val agg = StreamingOps.streamingTumblingAgg(
+        .orderBy(col("ts"), col("event_type")))
+      StreamingOps.streamingTumblingAgg(
         mem.toDF().toDF("ts", "event_type", "value"), width = "1 hour", watermark = "2 hours")
-      val sink = "q_stream_tumbling_sink"
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      try {
-        rows.grouped(math.max(2000, n.toInt + 1))
-          .foreach(batch => { mem.addData(batch.toSeq: _*); q.processAllAvailable() })
-      } finally q.stop()
-      s.table(sink)
-        .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
-          col("event_type"), col("n_events"), col("sum_value"))
-        .orderBy(col("window_start"), col("event_type"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    }.select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
+        col("event_type"), col("n_events"), col("sum_value"))
+      .orderBy(col("window_start"), col("event_type"))
   }
 
   /** Streaming exact dedup under the correctness gate: one surviving row
@@ -1696,36 +1481,16 @@ object SparkEntry {
     * set is not.
     */
   private def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 around the WHOLE replay (feed prep included — the r13
-    // toLocalIterator finding, see qStreamDistinct).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      val src = t(s, dir, "events")
+    StreamReplay.run(s, 2, "q_stream_dedup_sink", "append") { feed =>
+      val mem = feed[(Timestamp, Long, Long, String)](t(s, dir, "events")
         .select(col("ts"), col("event_id"), col("user_id"), col("event_type"))
-        .orderBy(col("ts"), col("event_id"))
-      val n = src.count()
-      val rows = src.toLocalIterator().asScala
-        .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      val mem = MemoryStream[(java.sql.Timestamp, Long, Long, String)]
-      val deduped = StreamingOps.streamingDedup(
+        .orderBy(col("ts"), col("event_id")))
+      StreamingOps.streamingDedup(
         mem.toDF().toDF("ts", "event_id", "user_id", "event_type"),
         keyCols = Seq("user_id", "event_type"), watermarkDelay = "365 days")
-      val sink = "q_stream_dedup_sink"
-      val q = deduped.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        rows.grouped(math.max(2000, n.toInt + 1))
-          .foreach(batch => { mem.addData(batch.toSeq: _*); q.processAllAvailable() })
-      } finally q.stop()
-      s.table(sink)
-        .select(col("user_id"), col("event_type"))
-        .orderBy(col("user_id"), col("event_type"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    }.select(col("user_id"), col("event_type"))
+      .orderBy(col("user_id"), col("event_type"))
   }
 
   /** Gap sessionization via Spark's BUILT-IN `session_window` operator —
@@ -1740,44 +1505,24 @@ object SparkEntry {
     * filtered from the sink) closes everything before the read.
     */
   private def qStreamSessionBuiltin(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // Width 2 around the WHOLE replay (feed prep included — the r13
-    // toLocalIterator finding, see qStreamDistinct).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
+    StreamReplay.run(s, 2, "q_stream_session_builtin_sink", "append") { feed =>
       val src = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("value"))
         .orderBy(col("ts"), col("user_id"))
       val maxTs = src.agg(max(col("ts"))).head().getTimestamp(0)
-      val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-      val sess = mem.toDF().toDF("user_id", "ts", "value")
+      val mem = feed[(Long, Timestamp, Double)](src,
+        (-1L, new Timestamp(maxTs.getTime + 100L * 86400000L), 0.0))
+      mem.toDF().toDF("user_id", "ts", "value")
         .withWatermark("ts", "30 minutes")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
         .agg(count(lit(1)).as("n_events"), sum(col("value")).as("_sv"))
-      val sink = "q_stream_session_builtin_sink"
-      // Feed (data + closing sentinel) enqueues fully BEFORE the query
-      // starts — same determinism rationale as q_stream_interval (r15):
-      // no partial-batch race against the trigger.
-      src.toLocalIterator().asScala
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
-        .grouped(1 << 20)
-        .foreach(b => mem.addData(b.toSeq: _*))
-      mem.addData((-1L,
-        new java.sql.Timestamp(maxTs.getTime + 100L * 86400000L), 0.0))
-      val q = sess.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink).filter(col("user_id") >= 0)
-        .select(col("user_id"),
-          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("session_start"),
-          col("n_events"), round(col("_sv"), 2).as("session_value"))
-        .orderBy(col("user_id"), col("session_start"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+    }.filter(col("user_id") >= 0)
+      .select(col("user_id"),
+        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
+          .as("session_start"),
+        col("n_events"), round(col("_sv"), 2).as("session_value"))
+      .orderBy(col("user_id"), col("session_start"))
   }
 
   /** Custom stateful streaming under the correctness gate: gap
@@ -1790,59 +1535,32 @@ object SparkEntry {
     * through the event-time timeout before the sink is read.
     */
   private def qStreamSessionize(s: SparkSession, dir: String): DataFrame = {
-    implicit val sqlCtx = s.sqlContext
     import s.implicits._
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val gap = 1800L
-    // Width 2 around the WHOLE replay (feed prep included — the r13
-    // toLocalIterator finding, see qStreamDistinct).
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
+    StreamReplay.run(s, 2, "q_stream_sessionize_sink", "append") { feed =>
       val src = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("value"))
         .orderBy(col("ts"), col("user_id"))
-      // One aggregate pass for the replay plan (count → batch split, max ts
-      // → sentinel placement); rows then stream through the driver one
-      // partition at a time.
-      val stats = src.agg(count(lit(1)).as("n"), max(col("ts")).as("mx")).head()
-      val maxTs = stats.getTimestamp(1).getTime
-      val rows = src.toLocalIterator().asScala
-        .map(r => StreamingOps.SessionInput(r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
-      val mem = MemoryStream[StreamingOps.SessionInput]
-      val sessions = StreamingOps.streamingSessionize(
-        mem.toDS(), gapSeconds = gap, watermarkDelay = "30 minutes")
-      val sink = "q_stream_sessionize_sink"
-      // Two micro-batches (r13; was three — the two data halves merged,
-      // each dropped commit cycle is ~0.7-1.2 s on this harness): ONE
-      // data batch carrying the first far-future sentinel, which advances
-      // the watermark past every open session's timeout at batch end,
-      // then one sentinel batch in which those timeouts fire and flush.
-      // The ordered-replay timeout-safety argument is unchanged — within
-      // a batch flatMapGroupsWithState sees each user's rows together and
-      // the watermark only moves AT batch end; boundary-spanning state is
-      // covered by StreamingOpsSpec's own multi-batch replay. The heavy
-      // first enqueue (toLocalIterator drain) happens BEFORE the query
-      // starts (r15) so the trigger cannot race the feed into
-      // load-dependent partial batches.
+      val maxTs = src.agg(max(col("ts"))).head().getTimestamp(0).getTime
       def sentinel(i: Int) = StreamingOps.SessionInput(-1L,
-        new java.sql.Timestamp(maxTs + (gap + 3600L * i) * 1000), 0.0)
-      mem.addData((rows.toSeq :+ sentinel(1)): _*)
-      val q = sessions.writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        mem.addData(sentinel(2))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.table(sink)
-        .filter(col("user_id") =!= -1L)
-        .select(col("user_id"),
-          date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          col("n_events"), round(col("session_value"), 2).as("session_value"))
-        .orderBy(col("user_id"), col("session_start"))
-    } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+        new Timestamp(maxTs + (gap + 3600L * i) * 1000), 0.0)
+      // Two runs (r13; was three): ONE data batch carrying the first
+      // far-future sentinel, which advances the watermark past every open
+      // session's timeout at batch end, then one sentinel batch in which
+      // those timeouts fire and flush. Within a batch
+      // flatMapGroupsWithState sees each user's rows together and the
+      // watermark only moves AT batch end, so the ordered-replay
+      // timeout-safety argument holds; boundary-spanning state is covered
+      // by StreamingOpsSpec's own multi-batch replay.
+      val mem = feed[StreamingOps.SessionInput](src, sentinel(1))
+      feed.afterFirstRun(mem.addData(sentinel(2)))
+      StreamingOps.streamingSessionize(
+        mem.toDS(), gapSeconds = gap, watermarkDelay = "30 minutes")
+    }.filter(col("user_id") =!= -1L)
+      .select(col("user_id"),
+        date_format(col("session_start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        col("n_events"), round(col("session_value"), 2).as("session_value"))
+      .orderBy(col("user_id"), col("session_start"))
   }
 
   /** As-of backward join: each click matched to the user's latest prior

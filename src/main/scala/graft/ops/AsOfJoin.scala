@@ -54,17 +54,6 @@ object AsOfJoin {
       valueCols: Seq[String]): DataFrame =
     merged(left, right, leftKeys, rightKeys, leftTs, rightTs, valueCols, forward = false)
 
-  /** Composite-key forward as-of. */
-  def forwardMergeKeys(
-      left: DataFrame,
-      right: DataFrame,
-      leftKeys: Seq[String],
-      rightKeys: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String]): DataFrame =
-    merged(left, right, leftKeys, rightKeys, leftTs, rightTs, valueCols, forward = true)
-
   /** Earliest right row at-or-after each left row, per key — physical
     * sort-merge operator; same semantics as [[forward]].
     */

@@ -9,9 +9,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * before enqueueing, so the ProcessingTime(0) trigger raced the
   * toLocalIterator feed and fired partial-data micro-batches whose count
   * depended on host load (3 batches even idle; more under load, each a
-  * state-store commit cycle competing with ambient CPU). r15 moved the
-  * feed before `start()`, which makes the cycle count a function of code
-  * alone — one data batch plus the engine's no-data watermark batch(es)
+  * state-store commit cycle competing with ambient CPU). [[StreamReplay]]
+  * feeds every replay before `start()`, which makes the cycle count a
+  * function of code alone — one data batch plus the engine's no-data watermark batch(es)
   * — so this spec can pin it: a regression that reintroduces the race
   * (or an accidental per-block enqueue) fails CI instead of showing up
   * as unattributable bench drift.
@@ -69,6 +69,11 @@ class StreamReplayBatchSpec extends SparkSpec {
   // Single-shot replays: everything enqueued before start →
   // one data batch + watermark flush. Budget 3 = shape (2) + 1 headroom.
   for ((q, budget) <- Seq(
+      "q_stream_tumbling" -> 3,
+      "q_stream_dedup" -> 3,
+      "q_stream_distinct" -> 3,
+      "q_stream_enrich" -> 3,
+      "q_stream_asof" -> 3,
       "q_stream_interval" -> 3,
       "q_stream_outer" -> 3,
       "q_stream_full_outer" -> 3,
