@@ -16,7 +16,9 @@ Also surfaces the artifact's ambient-state calibration (verdict r17 item
 the pass high_state when the probe median exceeds 1.5x its known floor).
 
 Usage: rising_runs.py <bench_queries.json> [...]
-Exit code bits: 1 = rising cell(s) flagged, 2 = high-state calibration.
+Exit code bits: 1 = rising cell(s) flagged or an artifact unreadable
+(reported, and the remaining files are still checked), 2 = high-state
+calibration.
 """
 import json
 import sys
@@ -30,18 +32,21 @@ for path in sys.argv[1:]:
     # r19 sidecar shape: "queries" is the flat name->seconds contract map
     # and the per-run detail lives under "queries_detail"; pre-r19
     # artifacts keep the detail cells directly under "queries".
-    cells = d.get("queries_detail") or d["queries"]
+    cells = d["queries_detail"] if "queries_detail" in d else d["queries"]
+    bad = None
     for name, cell in sorted(cells.items()):
-        if not isinstance(cell, dict):
-            sys.exit(f"{path}: cell {name!r} is not a per-run detail "
-                     "object (artifact has no queries_detail block)")
         # Chronological order lives ONLY in runs_raw; the `runs` list is
         # sorted ascending, so reading it as execution order would make
         # every >=1.5x-spread cell look rising (ADVICE r17) — refuse
         # artifacts without it rather than misread them.
-        if "runs_raw" not in cell:
-            sys.exit(f"{path}: cell {name!r} has no runs_raw "
-                     "(artifact too old for this detector)")
+        if not isinstance(cell, dict):
+            bad = (f"cell {name!r} is not a per-run detail object "
+                   "(artifact has no queries_detail block)")
+        elif "runs_raw" not in cell:
+            bad = (f"cell {name!r} has no runs_raw "
+                   "(artifact too old for this detector)")
+        if bad:
+            break
         runs = cell["runs_raw"]
         if len(runs) < 2:
             continue
@@ -49,6 +54,10 @@ for path in sys.argv[1:]:
         if last > RATIO * first and last - first > DELTA:
             mono = all(b > a for a, b in zip(runs, runs[1:]))
             flagged.append((name, runs, mono))
+    if bad:
+        print(f"{path}: {bad}", file=sys.stderr)
+        rc |= 1
+        continue
     print(f"{path}: {len(flagged)} rising cell(s) / {len(cells)} queries")
     for name, runs, mono in flagged:
         shape = "monotone" if mono else "rising"

@@ -8,13 +8,16 @@ package graft
 // work. /root/testdata is read-only and stays untouched; the output is
 // measurement input only — no query, bench, or oracle path reads it.
 //
-// Replication is keyed so each replica is a structurally intact copy:
-// every FK/PK pair gets the same per-replica offset (join fan-outs,
-// group cardinalities and orphan structure are exactly 10 disjoint
-// copies of the 1x truth). nation/region stay shared (tiny dims; the
-// nationkey FKs are unchanged). Embeddings get a per-replica
-// Rademacher sign flip (the ScaleSf1SmokeSpec device) so cross-replica
-// cosines randomize instead of duplicating every vector 10x.
+// Replication is keyed so the relational tables of each replica are a
+// structurally intact copy: every FK/PK pair gets the same per-replica
+// offset (join fan-outs, group cardinalities and orphan structure are
+// exactly 10 disjoint copies of the 1x truth). nation/region stay
+// shared (tiny dims; the nationkey FKs are unchanged). Embeddings get a
+// per-replica Rademacher sign flip (the ScaleSf1SmokeSpec device) so
+// cross-replica cosines randomize instead of duplicating every vector
+// 10x — replica 0 included: its sign pattern hash(i, 0) flips about
+// half the coordinates too, so no replica holds the source vectors
+// as-is.
 //
 // Usage: runMain graft.MakeScaledSf [outDir] [replicas]
 //        (defaults /tmp/sf1, 10; fully deterministic)

@@ -1,7 +1,8 @@
 package graft
 
 /** Driver-side memoizer for build-once artifacts (trained ANN quantizers,
-  * codebooks) keyed by a logical key plus a DATA snapshot id
+  * codebooks, the table schemas of [[Tables.load]]) keyed by a logical
+  * key plus a DATA snapshot id
   * ([[Tables.snapshotId]]): serves the cached value while the snapshot
   * matches, retrains IN PLACE when it moves. The structural bound (ADVICE
   * r15: a snapshot-suffixed map key grew one entry per rewrite, never

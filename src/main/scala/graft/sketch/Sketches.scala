@@ -1,6 +1,6 @@
 package graft.sketch
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Mergeable-sketch aggregation — the cardinality pattern that replaces
@@ -239,10 +239,14 @@ object Sketches {
   }
 
   /** Map-side Bloom prefilter — the RUNTIME-FILTER join pattern as an
-    * explicit operator: densify a [[bloomBuild]] relation into a single
-    * bit-array literal (≤ mBits/62 longs — 128 KB at the default 2²⁰
+    * explicit operator: collect a [[bloomBuild]] relation into a dense
+    * bitmap on the driver (≤ mBits/62 longs — 128 KB at the default 2²⁰
     * bits, the same driver-residency class as the k-means centroids) and
-    * evaluate membership per row INSIDE the scan, no shuffle, no join.
+    * test membership per row INSIDE the scan with one
+    * [[graft.expr.BloomMember]] per md5 digest, no shuffle, no join. The
+    * bitmap rides in that expression as a codegen reference object, not
+    * as a plan literal, so the plan Spark prints at execution start and
+    * on every adaptive re-plan stays a few KB whatever mBits is.
     * Exact-join semantics are preserved by construction: a Bloom filter
     * has no false negatives, so `bloomPrefilter(big, k, f).join(small)`
     * equals `big.join(small)` — false positives are dropped by the exact
@@ -255,30 +259,14 @@ object Sketches {
   def bloomPrefilter(
       df: DataFrame, keyCol: String, filter: DataFrame,
       kh: Int = 4, mBits: Long = 1L << 20): DataFrame = {
-    val nWords = ((mBits + 61) / 62).toInt
-    val words = new Array[Long](nWords)
+    val words = new Array[Long](((mBits + 61) / 62).toInt)
     filter.select(col("word"), col("mask")).collect()
       .foreach(r => words(r.getLong(0).toInt) = r.getLong(1))
-    val warr = lit(words)
-    def check(h: Column, slot: Int): Column = {
-      val b = conv(substring(h, slot * 8 + 1, 8), 16, 10).cast("long") % mBits
-      // b < 2^20 is exact in double, so the floor-div word index is exact
-      val mask = call_function("shiftleft", lit(1L), pmod(b, lit(62L)).cast("int"))
-      element_at(warr, floor(b / lit(62)).cast("int") + 1)
-        .bitwiseAND(mask) =!= 0L
-    }
-    // Bind each digest ONCE as a transform lambda variable: spelling the
-    // kh conditions over bloomBits re-evaluates the whole address array
-    // per condition (filter codegen cannot CSE across short-circuit
-    // branches — measured 12 s on the 600 k-row scan vs <1 s here).
-    val nDig = (kh + 3) / 4
-    val member = (0 until nDig).map { d =>
+    // Digest d carries addresses 4d .. 4d+3, as in bloomBits.
+    val member = (0 until (kh + 3) / 4).map { d =>
       val digest = md5(concat(lit(s"bl$d:"), col(keyCol).cast("string")))
-      val slots = math.min(4, kh - 4 * d)
-      element_at(
-        transform(array(digest),
-          h => (0 until slots).map(check(h, _)).reduce(_ && _)),
-        1)
+      GraftSqlBridge.column(graft.expr.BloomMember(
+        GraftSqlBridge.expression(digest), words, math.min(4, kh - 4 * d), mBits))
     }.reduce(_ && _)
     df.filter(col(keyCol).isNotNull && member)
   }

@@ -1,10 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils, SparkSession => ClassicSparkSession}
 
-/** The one `private[sql]` doorway this library uses: wrap a custom
-  * [[LogicalPlan]] (graft.plans.AsOfJoinNode) in a DataFrame. Spark's
+/** The `private[sql]` doorways this library uses: wrap a custom
+  * [[LogicalPlan]] (graft.plans.AsOfJoinNode) in a DataFrame or a native
+  * expression in a Column, and read a session's id. Spark's
   * supported extension points (SparkSessionExtensions) let third parties
   * inject rules/strategies but expose no public constructor from a logical
   * plan to a DataFrame, so every library shipping its own plan node hosts
@@ -14,6 +16,22 @@ object GraftSqlBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+
+  /** Wrap a native expression that holds driver-side state (the Bloom
+    * bitmap of graft.expr.BloomMember) in a Column directly: passed
+    * through `call_function`, that state would have to enter the plan as
+    * a literal argument and be printed with every plan string.
+    */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The catalyst expression behind a Column (unresolved until the frame
+    * it is used in is analyzed).
+    */
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The session's own unique id, for per-session cache keys. */
+  def sessionId(spark: SparkSession): String =
+    spark.asInstanceOf[ClassicSparkSession].sessionUUID
 
   /** Idempotently install a planner strategy into an existing session
     * (the programmatic counterpart of `spark.sql.extensions`, which is

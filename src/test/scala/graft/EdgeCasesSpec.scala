@@ -211,6 +211,11 @@ class EdgeCasesSpec extends SparkSpec {
       Seq("x").toDF("item").filter(lit(false)), "item")
     assert(Sketches.bloomPrefilter(
       Seq("a", "b").toDF("k"), "k", emptyFilter).count() == 0)
+    // ...and a null key is never kept, even by a filter holding every
+    // other key of the frame
+    val keys = Seq(Some("a"), None, Some("b")).toDF("k")
+    assert(Sketches.bloomPrefilter(keys, "k", Sketches.bloomBuild(keys, "k"))
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("a", "b"))
     // weightedSample: all-non-positive weights → empty, k > survivors OK
     val wdocs = Seq(("s", 1L, 0L), ("s", 2L, -3L)).toDF("source", "doc_id", "w")
     assert(CorpusAssembly.weightedSample(

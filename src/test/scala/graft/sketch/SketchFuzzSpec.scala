@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *    at the analytic confidence; cell-wise merge = one-pass build.
   *  - Bloom: ZERO false negatives under random member/probe/kh/m draws
   *    (the deterministic half of the contract), FP rate within a slack
-  *    factor of the analytic rate, and prefilter+join ≡ plain join.
+  *    factor of the analytic rate, prefilter+join ≡ plain join, and the
+  *    prefilter keeps exactly the keys the probe relation marks members.
   *  - HLL: merge law (union + re-max ≡ build-once, exactly) under
   *    random shard splits; estimates inside the rse band across random
   *    cardinalities.
@@ -129,6 +130,24 @@ class SketchFuzzSpec extends SparkSpec {
         .groupBy(col("k")).agg(count(lit(1)).as("c"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(pre == plain, s"trial $trial: prefilter changed join semantics")
+    }
+  }
+
+  test("fuzz: bloom prefilter keeps exactly the keys bloomProbe marks maybe_member") {
+    // kh 5 and 8 take two digests; small bitmaps so members and false
+    // positives both occur.
+    for ((kh, trial) <- Seq(3, 4, 5, 8).zipWithIndex; mBits <- Seq(64L, 1L << 10)) {
+      val rnd = new Random(4550 + trial)
+      val members = (0 until 40 + rnd.nextInt(60)).map(_ => s"m${rnd.nextInt(5000)}")
+      val keys = ((0 until 600).map(i => s"k$i") ++ members).distinct
+      val f = Sketches.bloomBuild(members.toDF("item"), "item", kh, mBits)
+      val probed = Sketches.bloomProbe(f, keys.toDF("item"), "item", kh, mBits)
+        .filter(col("maybe_member")).collect().map(_.getString(0)).toSet
+      val kept = Sketches.bloomPrefilter(keys.toDF("k").repartition(3), "k", f, kh, mBits)
+        .collect().map(_.getString(0)).toSet
+      assert(kept == probed, s"kh=$kh m=$mBits: prefilter and probe disagree " +
+        s"(${(kept -- probed).size} only kept, ${(probed -- kept).size} only probed)")
+      assert(members.toSet.subsetOf(kept), s"kh=$kh m=$mBits: false negative")
     }
   }
 

@@ -182,6 +182,18 @@ class SketchesSpec extends SparkSpec {
     assert(joined == plain)
   }
 
+  test("q_bloom_join's plan string stays small: the bitmap is not a plan literal") {
+    // Spark prints this string at execution start and on every adaptive
+    // re-plan; the 2^20-bit default bitmap as an array literal alone
+    // printed far past this bound.
+    val df = graft.SparkEntry.queries("q_bloom_join")(spark, sf001)
+    df.collect()
+    val plan = df.queryExecution.toString
+    info(s"plan string ${plan.length} chars")
+    assert(plan.contains("bloom_member"), "the prefilter is no longer in the plan")
+    assert(plan.length < 16 * 1024, s"plan string is ${plan.length} chars")
+  }
+
   test("deterministic HLL estimates land within rse bounds, registers bounded by 2^12") {
     val docs = (1 to 8000).map(i => ("g", s"tok$i")).toDF("grp", "item")
     val regs = Sketches.hllRegisters(docs, Seq("grp"), "item")
