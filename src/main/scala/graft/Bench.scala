@@ -17,8 +17,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF="k=v;k2=v2" — extra session confs for A/B
-    // experiments (e.g. spark.graft.iterLoopAqe=session) without a
-    // recompile; the driver never sets it.
+    // experiments (e.g. spark.sql.autoBroadcastJoinThreshold=-1) without
+    // a recompile; committed bench runs leave it unset.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim)
       .filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

@@ -163,20 +163,3 @@ class HttpLlmClient(
       .toMap)
   }
 }
-
-object HttpLlmClient {
-  /** Config gate: a real client materializes only when the environment
-    * carries an endpoint; otherwise callers fall back to the stub. The
-    * returned client is wrapped in the reference's retry policy
-    * (≤5 attempts, 2 s initial delay, ×2 backoff — utils/gpt.py:78-79).
-    */
-  def fromEnv(env: Map[String, String] = sys.env): Option[LlmClient] =
-    for {
-      base <- env.get("GRAFT_LLM_BASE_URL")
-      key <- env.get("GRAFT_LLM_API_KEY")
-    } yield new RetryingLlmClient(new HttpLlmClient(
-      base, key,
-      imageModel = env.getOrElse("GRAFT_LLM_IMAGE_MODEL", "vision-default"),
-      brandModel = env.getOrElse("GRAFT_LLM_BRAND_MODEL", "brand-default"),
-      correctModel = env.getOrElse("GRAFT_LLM_CORRECT_MODEL", "correct-default")))
-}

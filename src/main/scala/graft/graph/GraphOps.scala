@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import Iterate.{Aqe, Width}
+
 /** Iterative graph analytics over edge RELATIONS — the category next to
   * [[graft.dedup.Dedup.connectedComponents]] (which serves the dedup
   * cluster pass): rank/centrality passes a corpus pipeline runs over its
@@ -23,33 +25,24 @@ object GraphOps {
   /** Rank scale: ranks are fixed-point longs in units of 10⁻¹². */
   val RankScale: Long = 1000000000000L
 
-  /** Partition count for iterate-loop shuffles: one partition per
-    * `spark.graft.loopRowsPerPartition` edge/pair rows, clamped to the
-    * cluster's parallelism (and to ≥ 1). The per-partition row target is
-    * a conf, not a constant, because it is the loops' only
-    * scale-dependent knob and the right value is measured, not derived:
-    * too wide and every iteration pays (stages × width) scheduling for
-    * near-empty tasks; one partition per multi-million-edge relation
-    * serializes the join.
-    *
-    * Default 200,000 rows — the measured sf0.1 optimum (r14, re-measured
-    * r19): interleaved fresh-JVM A/B at sf0.1 width 32 read the
-    * loop-family total 39.7-40.9 s at 200 k vs 47.2-59.4 s at 1 M
-    * (2-partition loops serialize the frontier joins), so the default
-    * stays at the driver-bench scale's optimum. On the derived sf1
-    * (12.7 M supply edges) 1 M was within ambient noise of 200 k
-    * (121-138 s vs 119-166 s totals, interleaved) and 4 M — near-serial
-    * 4-partition loops — was consistently ~45% worse; a 100 TB
-    * deployment tunes this conf to land loop partitions in the §2.2
-    * efficiency band rather than recompiling.
+  /** The directed, unweighted edge prologue: null endpoints dropped,
+    * both cast to long, parallel edges collapsed when `dedup`.
     */
-  private[graft] def loopParts(
-      spark: org.apache.spark.sql.SparkSession, nRows: Long): Int = {
-    val per = math.max(1L,
-      spark.conf.get("spark.graft.loopRowsPerPartition", "200000").toLong)
-    math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, nRows / per + 1L)).toInt
+  private def directedEdges(edges: DataFrame, dedup: Boolean): DataFrame = {
+    val e = edges.filter(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src").cast("long"), col("dst").cast("long"))
+    if (dedup) e.distinct() else e
   }
+
+  /** The canonical undirected edge prologue: each edge once as `(a, b)`
+    * with `a < b`, self-loops and null endpoints dropped.
+    */
+  private def undirectedEdges(edges: DataFrame): DataFrame = edges
+    .filter(col("src").isNotNull && col("dst").isNotNull &&
+      col("src") =!= col("dst"))
+    .select(least(col("src"), col("dst")).cast("long").as("a"),
+      greatest(col("src"), col("dst")).cast("long").as("b"))
+    .distinct()
 
   /** PageRank (Brin & Page '98) with a FIXED iteration count, in exact
     * fixed-point integer arithmetic so the result is deterministic —
@@ -115,9 +108,10 @@ object GraphOps {
     // every iteration pays (stages × default-parallelism) scheduling for
     // near-empty tasks — measured ~0.7 s/iteration of pure overhead on a
     // 4 k-node graph at 32 partitions. The per-partition row target
-    // lives in loopParts (edges dominate nodes in any connected graph).
+    // lives in Iterate.loopParts (edges dominate nodes in any connected
+    // graph).
     val spark = edges.sparkSession
-    val parts = loopParts(spark, nE)
+    val parts = Iterate.loopParts(spark, nE)
     // SYMMETRIC hint (caller guarantees every edge has its reverse — the
     // bidirectional-graph case): every node then appears as a src and NO
     // node can dangle, so the dst-side union and the self-loop anti-join
@@ -163,17 +157,6 @@ object GraphOps {
       }
     val n = nodes.count()
 
-    // Each iteration CHECKPOINTS its rank relation (eager localCheckpoint)
-    // and drops the previous one — the mandatory shape for iterative
-    // algorithms on Spark. persist() alone is NOT enough: it caches data
-    // but leaves the LOGICAL plan un-truncated, so iteration i's plan
-    // contains the fully expanded lineage of iterations 1..i-1 and
-    // analysis/optimization time grows without bound (measured here:
-    // ~9 s/iteration of pure planning by iteration 10, data-independent).
-    // localCheckpoint replaces the plan with a LogicalRDD — depth one,
-    // every iteration plans in constant time. At cluster scale the same
-    // shape holds (reliable checkpoint if executor loss must be
-    // survivable).
     // Loop AQE stays ON here (unlike [[hits]]): an interleaved
     // fresh-JVM A/B (r14, 3 pairs, best-of-3 per config) measured the
     // pageRank family 28.4 s WITH session AQE vs 32.6 s without —
@@ -183,9 +166,7 @@ object GraphOps {
     // stats mis-pick the strategy); the per-job stage floor it adds is
     // cheaper than the mis-planned joins. hits is the opposite — its
     // measured asymmetry is documented there.
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
+    Iterate.withConf(spark, Width -> parts.toString) {
       // PERSONALIZED form (Page '99 §6 / Haveliwala '02): both the initial
       // mass and the 15% teleport concentrate on the seed set instead of
       // spreading uniformly — rank becomes proximity TO the seeds (topic-
@@ -229,27 +210,17 @@ object GraphOps {
         .join(nb, col("node") === col("dst"), "right")
         .select(col("node"),
           (col("base") + expr("(17 * coalesce(s, 0L)) div 20")).as("rank"))
-      var ranks = nb.select(col("node"), col("init").as("rank"))
-        .localCheckpoint(true)
       // Checkpoint every TWO iterations: planning a depth-2 chain costs
       // pennies, but halving the checkpoint jobs halves the per-iteration
       // scheduling/codegen floor (the dominant cost once data is small
-      // relative to the cluster). Span 5 was measured this round (r13)
-      // and is ~55% SLOWER family-wide (21.6 s -> 33.2 s for the 6-query
+      // relative to the cluster). Span 5 was measured (r13) and is ~55%
+      // SLOWER family-wide (21.6 s -> 33.2 s for the 6-query
       // pagerank/labelProp/bfs set): deeper chained plans lose more to
       // AQE re-planning + codegen of the larger stages than they save in
       // job floors, and bfs's `union(d)` self-reference doubles per extra
       // span step. Two is the sweet spot, not a guess.
-      var i = 0
-      while (i < iters) {
-        val span = math.min(2, iters - i)
-        var plan = ranks
-        for (_ <- 1 to span) plan = step(plan)
-        val next = plan.localCheckpoint(true)
-        ranks.unpersist(blocking = false)
-        ranks = next
-        i += span
-      }
+      val ranks = Iterate.fixedPoint(
+        nb.select(col("node"), col("init").as("rank")), iters, span = 2)(step)
       // ranks is checkpointed (materialized): the static relations are no
       // longer needed to evaluate it — release them instead of waiting on
       // a session-wide clearCache.
@@ -260,7 +231,7 @@ object GraphOps {
       if (seeds.isDefined) nb.unpersist(blocking = false)
       flagged.foreach(_.unpersist(blocking = false))
       ranks
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
   }
 
   /** Label propagation (Raghavan et al. 2007) with a FIXED iteration
@@ -330,7 +301,7 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nE = e.count()
     val spark = edges.sparkSession
-    val parts = loopParts(spark, nE)
+    val parts = Iterate.loopParts(spark, nE)
     // Self-votes enter as self-loop edges so one persisted relation
     // carries the whole vote flow, pre-partitioned on src at the
     // iteration width (the allE trick from pageRank).
@@ -338,8 +309,13 @@ object GraphOps {
         col("node").as("dst"), lit(1L).as("w")))
       .repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    def step(l: DataFrame): DataFrame = l
+      .join(allE, col("node") === col("src"))
+      .groupBy(col("dst"), col("label"))
+      .agg(sum(col("w")).as("c"))
+      .groupBy(col("dst"))
+      .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
+      .select(col("dst").as("node"), col("m").getField("label").as("label"))
     // Loop-AQE: measured and KEPT ON (r15 interleaved fresh-JVM A/B,
     // 3 alternating pairs, best-per-config: AQE-on 3.32/3.27 s vs
     // AQE-off 3.49/3.43 s for lp/lp_weighted solo) — labelProp sits in
@@ -347,31 +323,15 @@ object GraphOps {
     // landing on the persisted pre-partitioned allE: the two grouped
     // aggregations after the join still benefit from AQE's runtime
     // coalescing. Per-operator measurement, not the signature heuristic.
-    try {
-      def step(l: DataFrame): DataFrame = l
-        .join(allE, col("node") === col("src"))
-        .groupBy(col("dst"), col("label"))
-        .agg(sum(col("w")).as("c"))
-        .groupBy(col("dst"))
-        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-        .select(col("dst").as("node"), col("m").getField("label").as("label"))
-      var labels = nodes.select(col("node"), col("node").as("label"))
-        .localCheckpoint(true)
-      var i = 0
-      while (i < iters) {
-        val span = math.min(2, iters - i)
-        var plan = labels
-        for (_ <- 1 to span) plan = step(plan)
-        val next = plan.localCheckpoint(true)
-        labels.unpersist(blocking = false)
-        labels = next
-        i += span
-      }
-      e.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-      allE.unpersist(blocking = false)
-      labels
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    // Span 2: the pageRank measurement covered this loop.
+    val labels = Iterate.withConf(spark, Width -> parts.toString) {
+      Iterate.fixedPoint(nodes.select(col("node"), col("node").as("label")),
+        iters, span = 2)(step)
+    }
+    e.unpersist(blocking = false)
+    nodes.unpersist(blocking = false)
+    allE.unpersist(blocking = false)
+    labels
   }
 
   /** k-core decomposition by FIXED-round peeling (Seidman '83): each
@@ -399,20 +359,14 @@ object GraphOps {
   def kCore(edges: DataFrame, k: Int, rounds: Int = 4,
       dedupEdges: Boolean = true): DataFrame = {
     require(k >= 1 && rounds >= 1, "kCore needs k >= 1 and rounds >= 1")
-    val e0 = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    var e = (if (dedupEdges) e0.distinct() else e0).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
+    val e = Iterate.fixedPoint(directedEdges(edges, dedupEdges), rounds,
+        span = 1) { cur =>
+      val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("_deg"))
         .filter(col("_deg") >= k)
         .select(col("src").as("_keep"))
-      val next = e
+      cur
         .join(keep, col("src") === col("_keep"), "left_semi")
         .join(keep, col("dst") === col("_keep"), "left_semi")
-        .localCheckpoint(true)
-      e.unpersist(blocking = false)
-      e = next
     }
     e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
       .select(col("src").as("node"), col("degree"))
@@ -462,12 +416,7 @@ object GraphOps {
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
     require(k >= 3 && rounds >= 1, "kTruss needs k >= 3 and rounds >= 1")
-    val und0 = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
+    val und0 = undirectedEdges(edges)
     def support(cur: DataFrame): DataFrame = {
       val deg = cur.select(col("a").as("node"))
         .union(cur.select(col("b").as("node")))
@@ -511,12 +460,8 @@ object GraphOps {
     eRdd.localCheckpoint()
     val nE = eRdd.count()
     var e = spark.createDataFrame(eRdd, und0.schema)
-    val parts = loopParts(spark, nE)
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    val parts = Iterate.loopParts(spark, nE)
+    Iterate.withConf(spark, Width -> parts.toString, Aqe -> "false") {
       for (_ <- 1 to rounds) {
         val nextDf = e
           .join(support(e),
@@ -541,9 +486,6 @@ object GraphOps {
         .localCheckpoint(true)
       eRdd.unpersist(blocking = false)
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
     }
   }
 
@@ -578,13 +520,7 @@ object GraphOps {
     * materialized in memory and the driver holds nothing.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = undirectedEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val deg = und.select(col("a").as("node"))
       .union(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
@@ -652,13 +588,7 @@ object GraphOps {
     */
   def linkPrediction(edges: DataFrame, minCommon: Long = 1L): DataFrame = {
     require(minCommon >= 1L, "linkPrediction needs minCommon >= 1")
-    val und = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val und = undirectedEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val adj = und.select(col("a").as("z"), col("b").as("n"))
       .union(und.select(col("b").as("z"), col("a").as("n")))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -718,45 +648,30 @@ object GraphOps {
   def bfsDepths(edges: DataFrame, seeds: DataFrame, rounds: Int = 6,
       dedupEdges: Boolean = true): DataFrame = {
     require(rounds >= 1, "bfsDepths needs at least one round")
-    val e0 = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val e = (if (dedupEdges) e0.distinct() else e0)
+    val e = directedEdges(edges, dedupEdges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nE = e.count()
     val spark = edges.sparkSession
-    val parts = loopParts(spark, nE)
+    val parts = Iterate.loopParts(spark, nE)
     val allE = e.repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    def step(d: DataFrame): DataFrame = d
+      .join(allE, col("node") === col("src"))
+      .select(col("dst").as("node"), (col("depth") + 1L).as("depth"))
+      .union(d)
+      .groupBy(col("node")).agg(min(col("depth")).as("depth"))
     // Loop-AQE: measured and KEPT ON (r15 interleaved fresh-JVM A/B,
     // best-per-config: AQE-on 2.51 s vs AQE-off 2.85 s solo) — the
     // min-depth union+agg per round benefits from runtime coalescing,
-    // unlike hits' fixed-shape half-steps.
-    try {
-      def step(d: DataFrame): DataFrame = d
-        .join(allE, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("depth") + 1L).as("depth"))
-        .union(d)
-        .groupBy(col("node")).agg(min(col("depth")).as("depth"))
-      var depths = seeds.select(col("node").cast("long")).distinct()
-        .select(col("node"), lit(0L).as("depth"))
-        .localCheckpoint(true)
-      var i = 0
-      while (i < rounds) {
-        val span = math.min(2, rounds - i)
-        var plan = depths
-        for (_ <- 1 to span) plan = step(plan)
-        val next = plan.localCheckpoint(true)
-        depths.unpersist(blocking = false)
-        depths = next
-        i += span
-      }
-      e.unpersist(blocking = false)
-      allE.unpersist(blocking = false)
-      depths
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    // unlike hits' fixed-shape half-steps. Span 2: the pageRank
+    // measurement covered this loop.
+    val depths = Iterate.withConf(spark, Width -> parts.toString) {
+      Iterate.fixedPoint(seeds.select(col("node").cast("long")).distinct()
+        .select(col("node"), lit(0L).as("depth")), rounds, span = 2)(step)
+    }
+    e.unpersist(blocking = false)
+    allE.unpersist(blocking = false)
+    depths
   }
 
   /** Bounded-radius harmonic centrality from a probe set — "how close is
@@ -789,25 +704,20 @@ object GraphOps {
   def harmonicCentrality(edges: DataFrame, probes: DataFrame,
       rounds: Int = 4, dedupEdges: Boolean = true): DataFrame = {
     require(rounds >= 1, "harmonicCentrality needs at least one round")
-    val e0 = edges
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val e = (if (dedupEdges) e0.distinct() else e0)
+    val e = directedEdges(edges, dedupEdges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nE = e.count()
     val spark = edges.sparkSession
-    val parts = loopParts(spark, nE)
+    val parts = Iterate.loopParts(spark, nE)
     val allE = e.repartition(parts, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val p0 = probes.select(col("node").cast("long")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
     // Loop-AQE: measured and KEPT ON (r15 interleaved fresh-JVM A/B,
     // best-per-config: AQE-on 3.61 s vs AQE-off 4.11 s solo) — the
     // anti-join against the growing visited set wants AQE's runtime
     // strategy choice (it flips to broadcast as the frontier thins).
-    try {
+    Iterate.withConf(spark, Width -> parts.toString) {
       // DELTA BFS: expand only the newest layer. The monolithic form
       // (re-join the WHOLE visited set against the edges every round)
       // multiplies |ball|·avg-degree per round — measured 18 s at sf0.1
@@ -842,7 +752,7 @@ object GraphOps {
             Seq("probe", "node"), "left_anti")
           .localCheckpoint(true)
         if (fresh.isEmpty) {
-          fresh.unpersist(blocking = false)
+          Iterate.release(fresh)
           live = false
         } else {
           layerFrames += fresh
@@ -861,12 +771,12 @@ object GraphOps {
           coalesce(col("_hc_n"), lit(0L)).as("reached"),
           coalesce(col("_hc_h"), lit(0L)).as("harmonic_micro"))
         .localCheckpoint(true)
-      layerFrames.foreach(_.unpersist(blocking = false))
+      layerFrames.foreach(Iterate.release)
       e.unpersist(blocking = false)
       allE.unpersist(blocking = false)
       p0.unpersist(blocking = false)
       out
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
   }
 
   /** Degree distribution: how many nodes have each exact out-degree —
@@ -881,10 +791,7 @@ object GraphOps {
     */
   def degreeDistribution(edges: DataFrame,
       dedupEdges: Boolean = true): DataFrame = {
-    val e0 = edges.filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val e = if (dedupEdges) e0.distinct() else e0
-    e.groupBy(col("src")).agg(count(lit(1)).as("degree"))
+    directedEdges(edges, dedupEdges).groupBy(col("src")).agg(count(lit(1)).as("degree"))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
   }
 
@@ -926,13 +833,11 @@ object GraphOps {
       dedupEdges: Boolean = true,
       bipartite: Boolean = false): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    val e0 = edges.filter(col("src").isNotNull && col("dst").isNotNull)
-      .select(col("src").cast("long"), col("dst").cast("long"))
-    val e = (if (dedupEdges) e0.distinct() else e0)
+    val e = directedEdges(edges, dedupEdges)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nE = e.count()
     val spark = edges.sparkSession
-    val parts = loopParts(spark, nE)
+    val parts = Iterate.loopParts(spark, nE)
     val eS = e.repartition(parts, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
     val eD = e.repartition(parts, col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
     // BIPARTITE hint (caller guarantees the src and dst node sets are
@@ -986,11 +891,7 @@ object GraphOps {
     // iterate⋈allE) need AQE's runtime strategy choice — per-operator
     // measurement, not a blanket rule. The raw-edge dedup scan
     // materialized under the session's AQE setting in the counts above.
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Iterate.withConf(spark, Width -> parts.toString, Aqe -> "false") {
       // half-step: push `fromCol` mass along (joinKey → outKey),
       // L1-normalize. The iterate stays SPARSE — only nodes that
       // received mass appear; absent node ≡ score 0, which is exact
@@ -1047,8 +948,8 @@ object GraphOps {
           .localCheckpoint(true)
         val nextHub = half(nextAuth, eD, "dst", "src", "auth", "hub")
           .localCheckpoint(true)
-        if (auth != null) auth.unpersist(blocking = false)
-        hub.unpersist(blocking = false)
+        if (auth != null) Iterate.release(auth)
+        Iterate.release(hub)
         auth = nextAuth
         hub = nextHub
         i += 1
@@ -1072,16 +973,13 @@ object GraphOps {
           .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"),
             coalesce(col("hub"), lit(0L)).as("hub")))
         .localCheckpoint(true)
-      auth.unpersist(blocking = false)
-      hub.unpersist(blocking = false)
+      Iterate.release(auth)
+      Iterate.release(hub)
       e.unpersist(blocking = false)
       eS.unpersist(blocking = false)
       eD.unpersist(blocking = false)
       if (!bipartite) nodes.unpersist(blocking = false)
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
     }
   }
 }

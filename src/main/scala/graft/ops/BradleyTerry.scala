@@ -4,6 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.graph.Iterate
+import graft.graph.Iterate.{Aqe, Width}
+
 /** Bradley–Terry pairwise-preference ratings — the model under RLHF
   * preference data, chatbot-arena leaderboards, and A/B'd prompt
   * variants: from `(winner, loser)` match outcomes, estimate a strength
@@ -36,10 +39,9 @@ object BradleyTerry {
     * `iters` fixed-point steps joins the pair relation against the
     * |items|-row rating relation twice and re-aggregates — pair-relation
     * sized, with iteration parallelism set to it, not the session
-    * default. Rating relations localCheckpoint every 2 steps (lineage
-    * truncation — persist alone leaves analysis time growing per
-    * iteration; the pageRank lesson). The normalizer is a single-row
-    * broadcast, never a collect.
+    * default. Rating relations localCheckpoint every step through
+    * [[graft.graph.Iterate.fixedPoint]] (lineage truncation). The
+    * normalizer is a single-row broadcast, never a collect.
     *
     * Reference semantics: Hunter '04 eq. (2); ties excluded upstream
     * (a tie is no Bradley–Terry observation).
@@ -71,7 +73,7 @@ object BradleyTerry {
     }
     val nPairs = pairs.count() // cached by the stats pass
     val spark = matches.sparkSession
-    val parts = graft.graph.GraphOps.loopParts(spark, nPairs)
+    val parts = Iterate.loopParts(spark, nPairs)
     // AQE off inside the fixed-point loop — the GraphOps.hits rationale
     // (r14): one q_bradley_terry run submitted 87 jobs under AQE for
     // 1.1 s of actual job time (every query stage its own job; the rest
@@ -81,11 +83,7 @@ object BradleyTerry {
     // are partial-agg protected, and the Σπ' normalizer is a one-row
     // broadcast either way. The data-sized pair aggregation above ran
     // under the session's AQE setting.
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val savedAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Iterate.withConf(spark, Width -> parts.toString, Aqe -> "false") {
       // Each step CHECKPOINTS π' before the normalizer reads it: the
       // Σπ' broadcast makes π' appear TWICE in the plan, and a lazy
       // chain doubles the whole subtree per iteration (2^iters blowup —
@@ -128,15 +126,8 @@ object BradleyTerry {
       // hoped-for ReuseExchange dedup of the chained π' subtrees does
       // not materialize across the broadcast/alias boundary, so the
       // span-2 plan re-executes step 1 inside step 2.
-      var r = stats.select(col("item"), lit(1000000L).as("r"))
-        .localCheckpoint(true)
-      var i = 0
-      while (i < iters) {
-        val next = step(r).localCheckpoint(true)
-        r.unpersist(blocking = false)
-        r = next
-        i += 1
-      }
+      val r = Iterate.fixedPoint(stats.select(col("item"), lit(1000000L).as("r")),
+        iters, span = 1)(step)
       val out = stats.join(r, Seq("item"))
         .select(col("item"), col("wins"), col("n_matches"),
           col("r").as("rating_micro"))
@@ -144,9 +135,6 @@ object BradleyTerry {
       pairs.unpersist(blocking = false)
       stats.unpersist(blocking = false)
       out
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", saved)
-      spark.conf.set("spark.sql.adaptive.enabled", savedAqe)
     }
   }
 }

@@ -46,35 +46,6 @@ object Stage {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /** S4 — native XLSX scan (zip+XML parse, no POI): the reference's
-    * calamine read with `skip_rows` (handlers/belarus.py:106-110). Single
-    * workbook = driver-side parse by nature; the many-file corpus form is
-    * [[Xlsx.readFiles]].
-    */
-  def readXlsx(spark: SparkSession, bytes: Array[Byte], skipRows: Int = 0): DataFrame =
-    Xlsx.read(spark, bytes, skipRows)
-
-  def readXlsxFile(spark: SparkSession, path: String, skipRows: Int = 0): DataFrame =
-    Xlsx.read(spark, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), skipRows)
-
-  /** K1 — native XLSX delivery sink (the reference's `write_excel` step,
-    * main.py:40-47): a small stringified frame → workbook bytes → file.
-    * Driver-side and row-capped by design — Parquet stays the canonical
-    * distributed sink; this is the human/FTP-facing interchange artifact.
-    */
-  def writeXlsxFile(df: DataFrame, path: String): Unit =
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), Xlsx.writeBytes(df))
-
-  /** S7 — native DOCX multi-table concat (zip+XML parse, python-docx cell
-    * semantics; handlers/kyrgyzstan.py:239-251). Corpus form:
-    * [[Docx.readFiles]].
-    */
-  def readDocx(spark: SparkSession, bytes: Array[Byte]): DataFrame =
-    Docx.readTables(spark, bytes)
-
-  def readDocxFile(spark: SparkSession, path: String): DataFrame =
-    Docx.readTables(spark, java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
-
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
 

@@ -3,6 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
+import graft.graph.Iterate
+import graft.graph.Iterate.Width
+
 import scala.jdk.CollectionConverters._
 
 /** Replay harness of the registered `q_stream_*` queries: finished tables
@@ -40,16 +43,12 @@ import scala.jdk.CollectionConverters._
   */
 object StreamReplay {
 
-  private val Width = "spark.sql.shuffle.partitions"
-
   /** Builds the streaming plan with `plan` at `width`, runs it to
     * completion into the memory sink `sink` and returns the sink table.
     */
   def run(s: SparkSession, width: Int, sink: String, outputMode: String)(
-      plan: Feed => Dataset[_]): DataFrame = {
-    val saved = s.conf.get(Width)
-    s.conf.set(Width, width.toString)
-    try {
+      plan: Feed => Dataset[_]): DataFrame =
+    Iterate.withConf(s, Width -> width.toString) {
       val feed = new Feed
       val q = plan(feed).writeStream.format("memory").queryName(sink)
         .outputMode(outputMode).start()
@@ -58,8 +57,7 @@ object StreamReplay {
         feed.later.foreach { phase => phase(); q.processAllAvailable() }
       } finally q.stop()
       s.table(sink)
-    } finally s.conf.set(Width, saved)
-  }
+    }
 
   /** The sources of one replay. */
   final class Feed private[StreamReplay] {

@@ -1,6 +1,9 @@
 package graft.graph
 
 import graft.SparkSpec
+import graft.ops.BradleyTerry
+import graft.streaming.StreamReplay
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphOpsSpec extends SparkSpec {
@@ -424,36 +427,45 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("iterative ops are AQE-independent and restore the session setting") {
-    // hits disables AQE inside its loop; the pageRank family keeps it
-    // (both per r14 interleaved measurements) — either way the results
-    // are a pure function of the edge set, so flipping the SESSION AQE
-    // setting must change plans only, and every op must restore the
-    // session value it found (the conf-leak contract).
+    // hits, kTruss and BradleyTerry disable AQE inside their loops; the
+    // pageRank family keeps it (per interleaved measurements) — either
+    // way the results are a pure function of the edge set, so flipping
+    // the SESSION AQE setting must change plans only. Every loop op and
+    // the stream replay must leave spark.conf.getAll exactly as found
+    // (the conf-leak contract); AQE starts UNSET, so a restore that pins
+    // the default value shows up as a new key.
     val rnd = new scala.util.Random(29)
     val pairs = (1 to 300).map { _ =>
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)
     }.filter(p => p._1 != p._2).distinct
     val edges = pairs.toDF("src", "dst")
     val seeds = Seq(0L, 2L, 4L).toDF("node")
-    def all() = (
-      GraphOps.pageRank(edges, iters = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet,
-      GraphOps.labelPropagation(edges, iters = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet,
-      GraphOps.bfsDepths(edges, seeds, rounds = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet,
-      GraphOps.hits(edges, iters = 2).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
-    val before = spark.conf.get("spark.sql.adaptive.enabled")
-    val withAqe = all()
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == before,
-      "ops must restore the session AQE setting")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val withoutAqe =
-      try all()
-      finally spark.conf.set("spark.sql.adaptive.enabled", before)
-    assert(withAqe == withoutAqe,
-      "session AQE setting must not change any result")
+    def run(name: String)(op: => DataFrame): Set[Seq[Any]] = {
+      val before = spark.conf.getAll
+      val rows = op.collect().map(_.toSeq).toSet
+      assert(spark.conf.getAll == before, s"$name changed the session confs")
+      rows
+    }
+    def all() = Seq(
+      run("pageRank")(GraphOps.pageRank(edges, iters = 3)),
+      run("labelPropagation")(GraphOps.labelPropagation(edges, iters = 3)),
+      run("kTruss")(GraphOps.kTruss(edges, k = 3, rounds = 2)),
+      run("bfsDepths")(GraphOps.bfsDepths(edges, seeds, rounds = 3)),
+      run("harmonicCentrality")(
+        GraphOps.harmonicCentrality(edges, seeds, rounds = 3)),
+      run("hits")(GraphOps.hits(edges, iters = 2)),
+      run("BradleyTerry")(BradleyTerry.ratings(edges, "src", "dst", iters = 3)),
+      run("StreamReplay")(StreamReplay.run(spark, 2, "graph_conf_leak_sink",
+          "append") { feed => feed[Long](spark.range(3).toDF()).toDF() }))
+    val aqe = Iterate.Aqe
+    val found = spark.conf.getAll.get(aqe)
+    spark.conf.unset(aqe)
+    try {
+      val withAqe = all()
+      val withoutAqe = Iterate.withConf(spark, aqe -> "false")(all())
+      assert(withAqe == withoutAqe,
+        "session AQE setting must not change any result")
+    } finally found.foreach(spark.conf.set(aqe, _))
   }
 
   test("degreeDistribution: star graph — one hub of degree n, n leaves of 1") {
