@@ -1,29 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Each query is timed RUNS times and the minimum is reported: host
     // contention (other processes on the bench box) inflates individual
     // runs uniformly, and min-of-3 recovers the uncontended time — round 4
     // recorded a 1.9x "slowdown" that an idle-host re-run disproved.
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — extra session confs for A/B
-    // experiments (e.g. spark.sql.autoBroadcastJoinThreshold=-1) without
-    // a recompile; committed bench runs leave it unset.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").map(_.trim)
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    // SPARK_GRAFT_CONF confs (A/B experiments) apply at build time;
+    // committed bench runs leave it unset.
+    val (spark, cpus) = Session.forMain(4)
     // Untimed warm-up, two layers:
     //  (1) a tiny count over EVERY test table — Hadoop-FS init, parquet
     //      footer reads, and scan codegen otherwise land on whichever
@@ -97,7 +84,7 @@ object Bench {
     // frames from warm-up) survive the per-run sweep — the sweep must only
     // evict what a query run itself left behind (ADVICE r12). Scope note
     // (ADVICE r13): this exemption covers RDD-level persists ONLY; the
-    // clearCache() below still evicts every CacheManager (DataFrame-level)
+    // sweep still evicts every CacheManager (DataFrame-level)
     // entry each run, so a shared warm DataFrame cache would be recomputed
     // inside every timed run — don't rely on it being spared. The memoized
     // DataFrames that exist today (supplyPairs, coPairs) lose their cache
@@ -132,17 +119,10 @@ object Bench {
         val dt = (System.nanoTime() - t0) / 1e9
         if (!failed) { ts += dt; loads += load0; gcs += gcMillis() - gc0 }
         // Drop blocks persisted inside operators (dedup/similarity reuse
-        // frames) so runs don't inherit each other's storage pressure.
-        spark.catalog.clearCache()
-        // clearCache only empties the CacheManager (DataFrame persists);
-        // eager localCheckpoint frames returned by iterative graph ops
-        // register RDD-level blocks that survive it and accumulate across
-        // 271 queries x 3 runs — the round-11 "run-3 tail" suspect.
-        // blocking: the async form can leave blocks alive into the next
-        // timed run (the residual run-3 tail after the round-12 fix).
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) =>
-            if (!baselineRdds.contains(id)) rdd.unpersist(blocking = true) }
+        // frames, the iterative ops' localCheckpoint results) so runs
+        // don't inherit each other's storage pressure — the round-11
+        // "run-3 tail" suspect.
+        Session.sweep(spark, baselineRdds)
         if (sys.env.contains("SPARK_GRAFT_BENCH_GC")) System.gc()
         i += 1
       }
@@ -203,12 +183,7 @@ object Bench {
     // write below fails, so a tail-only reader never chases a stale file.
     val queriesFile = try {
       val detail = timings.map { case (name, failed, ts, raw, loads, gcs) =>
-        // True median: average the two middle elements for even run
-        // counts (ts(size/2) alone reports the MAX of a 2-run sample).
-        val med =
-          if (ts.isEmpty) -1.0
-          else if (ts.size % 2 == 1) ts(ts.size / 2)
-          else (ts(ts.size / 2 - 1) + ts(ts.size / 2)) / 2.0
+        val med = if (ts.isEmpty) -1.0 else median(ts)
         val mn = if (failed || ts.isEmpty) -1.0 else ts.head
         // load = 1-min system loadavg at each run's START (arrival order,
         // aligned with runs_raw); gc_ms = JVM GC time spent inside that
@@ -249,4 +224,12 @@ object Bench {
     println(s"""{"metric":"total","unit":"sec","sf":"$sfDir","n_queries":${results.size},"failed":$failed,"load_med":$loadMed,"load_max":$loadMax,"gc_total_ms":$gcTotal,"calib_med":${fmt2(calibMed)},"high_state":$highState,"queries_file":$queriesFile,"value":$total}""")
     spark.stop()
   }
+
+  /** True median of a sorted non-empty sample: the mean of the two middle
+    * elements for an even count (`sorted(size / 2)` alone reports the
+    * upper one, the MAX of a 2-run sample).
+    */
+  def median(sorted: Seq[Double]): Double =
+    if (sorted.size % 2 == 1) sorted(sorted.size / 2)
+    else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
 }

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.trace.JobLog
 
 /** Job-count census over the whole registered query surface — the
-  * companion to [[ProfileJobs]] (one query, per-job timeline). Under
+  * companion to [[Profile]]'s per-job table of one query. Under
   * ambient load every submitted job pays a scheduling quantum, so the
   * job COUNT — not idle wall — is what predicts a query's exposure to a
   * busy host (the r14 lesson: the three most driver-inflated queries
@@ -15,13 +14,11 @@ import org.apache.spark.sql.SparkSession
   * Usage: runMain graft.JobCountSweep [sfDir] [filterPrefix]
   *
   * Prints one `name jobs wall_s` line per query, sorted by jobs
-  * descending. Counting is made deterministic without listener-bus
-  * internals: after each query a MARKER job is submitted and the sweep
-  * waits for its JobStart to be delivered — the bus is FIFO, so every
-  * earlier start has been counted by then. `wall_s` is captured BEFORE
-  * the marker job (the census times the query, not the drain), and a
-  * marker that fails to arrive within 30 s marks the row INCOMPLETE
-  * instead of silently reporting a possibly-short count (ADVICE r15).
+  * descending. Each query runs once to warm up, then once under
+  * [[JobLog.record]], which counts the jobs it starts. `wall_s` times
+  * the query, not the recorder's drain, and a drain that times out marks
+  * the row INCOMPLETE instead of silently reporting a possibly-short
+  * count (ADVICE r15).
   *
   * When `SPARK_GRAFT_JOBS_OUT` is set, the census is also written there
   * as JSON sorted by query name — a committed, round-over-round diffable
@@ -30,19 +27,10 @@ import org.apache.spark.sql.SparkSession
   * item #5).
   */
 object JobCountSweep {
-  val MarkerDesc = "__graft_job_count_marker__"
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val prefix = args.lift(1).getOrElse("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sc = spark.sparkContext
+    val (spark, cpus) = Session.forMain(4, "ERROR")
     val results =
       scala.collection.mutable.ArrayBuffer.empty[(String, Int, Double, Boolean)]
     // Queries that threw are recorded, not just logged (ADVICE r16: a
@@ -59,33 +47,11 @@ object JobCountSweep {
       var measured = false
       try {
         run() // warm-up: one-time memoizer/JIT jobs land outside the count
-        spark.catalog.clearCache()
-        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        val n = new java.util.concurrent.atomic.AtomicInteger
-        val marker = new java.util.concurrent.CountDownLatch(1)
-        val l = new SparkListener {
-          override def onJobStart(js: SparkListenerJobStart): Unit = {
-            val desc = Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-            if (desc.contains(MarkerDesc)) marker.countDown()
-            else { n.incrementAndGet(); () }
-          }
-        }
-        sc.addSparkListener(l)
-        val t0 = System.nanoTime()
-        var drained = false
-        try {
-          run()
-          val wall = (System.nanoTime() - t0) / 1e9 // before the marker job
-          sc.setJobDescription(MarkerDesc)
-          try sc.parallelize(1 to 1, 1).count()
-          finally sc.setJobDescription(null)
-          drained = marker.await(30, java.util.concurrent.TimeUnit.SECONDS)
-          results += ((name, n.get, wall, !drained))
-          measured = true
-        } finally sc.removeSparkListener(l)
-        spark.catalog.clearCache()
-        sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        Session.sweep(spark)
+        val rec = JobLog.record(spark)(run())
+        results += ((name, rec.jobs.size, rec.wallS, !rec.drained))
+        measured = true
+        Session.sweep(spark)
       } catch {
         case e: Throwable =>
           if (!measured) failedQueries += name

@@ -21,7 +21,7 @@ package graft
 //
 // Usage: runMain graft.MakeScaledSf [outDir] [replicas]
 //        (defaults /tmp/sf1, 10; fully deterministic)
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object MakeScaledSf {
@@ -29,11 +29,7 @@ object MakeScaledSf {
     val out = args.headOption.getOrElse("/tmp/sf1")
     val reps = if (args.length > 1) args(1).toInt else 10
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _) = Session.forMain(8)
 
     def rep(df: DataFrame): DataFrame =
       df.withColumn("k", explode(sequence(lit(0), lit(reps - 1))))

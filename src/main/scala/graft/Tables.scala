@@ -8,6 +8,13 @@ import org.apache.spark.sql.types.StructType
   * All engine queries read through here: parquet scans get Catalyst's
   * filter pushdown + column pruning for free, and graft's native functions
   * are registered on first touch of a session.
+  *
+  * Precondition: the session was built by [[Session.builder]] (or carries
+  * its confs), so it runs in the UTC zone with
+  * `spark.sql.legacy.parquet.nanosAsLong` on. Loading changes no session
+  * conf. The zone makes the events TIMESTAMP_NTZ → TIMESTAMP cast below
+  * value-preserving regardless of the host's default zone; `nanosAsLong`
+  * lets a TIMESTAMP(NANOS) column be read at all.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -27,30 +34,21 @@ object Tables {
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     GraftFunctions.register(spark)
-    // Spark 4 has no nanosecond timestamp type, so a TIMESTAMP(NANOS)
-    // column is read as long and converted to microseconds below (integer
-    // `div`, not double division: ns-epoch values overflow a double's
-    // 53-bit mantissa). The shipped test tables hold TIMESTAMP(MICROS) at
-    // every scale; the nanos branch is kept for regenerated tables.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Pin the session zone HERE, not just in the entry-point builders:
-    // every main (Verify/Bench/Profile/ExplainAudit) and every spec loads
-    // tables through this method, so the NTZ→timestamp cast below is
-    // value-preserving regardless of the host's default timezone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     val path = s"$sfDir/$table.parquet"
     val schema = schemas.get(
         s"${GraftSqlBridge.sessionId(spark)}|$path", snapshotId(spark, sfDir, table)) {
       spark.read.parquet(path).schema
     }
     val df = spark.read.schema(schema).parquet(path)
-    // nanosAsLong only rewrites TIMESTAMP(NANOS) columns; the shipped
-    // events tables (micro precision, not UTC-adjusted) read as
-    // TIMESTAMP_NTZ instead — branch on the LOADED type, not the table
-    // name alone, and normalize either form to the session-zone
-    // TIMESTAMP every operator downstream (unix_micros, window,
-    // date_format) was built against. The session zone is pinned UTC
-    // above, so the NTZ→LTZ cast is value-preserving.
+    // Spark 4 has no nanosecond timestamp type, so a TIMESTAMP(NANOS)
+    // column is read as long and converted to microseconds (integer
+    // `div`, not double division: ns-epoch values overflow a double's
+    // 53-bit mantissa). The shipped test tables hold TIMESTAMP(MICROS) at
+    // every scale, read as TIMESTAMP_NTZ; the nanos branch is kept for
+    // regenerated tables. Branch on the LOADED type, not the table name
+    // alone, and normalize either form to the session-zone TIMESTAMP
+    // every operator downstream (unix_micros, window, date_format) was
+    // built against.
     if (table == "events")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftFunctions
+import graft.graph.Iterate
 import graft.dedup.Dedup
 
 /** Byte-pair-encoding subword vocabulary TRAINING (Sennrich et al.
@@ -81,12 +82,12 @@ object Bpe {
         merges += ((l, r, c))
         val next = state.withColumn("syms",
           GraftFunctions.bpeMergeStep(col("syms"), l, r)).localCheckpoint(true)
-        state.unpersist(blocking = false)
+        Iterate.release(state)
         state = next
         k += 1
       }
     }
-    state.unpersist(blocking = false)
+    Iterate.release(state)
     Model(merges.toSeq)
   }
 

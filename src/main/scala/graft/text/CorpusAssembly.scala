@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.graph.Iterate
 
 /** Corpus-assembly operators — the last mile of a training-data pipeline:
   * deterministic shuffling into shards, packing documents into
@@ -639,7 +640,9 @@ object CorpusAssembly {
         .localCheckpoint(true)
       if (pick.isEmpty) exhausted = true
       else {
-        selected = selected.unionByName(pick).localCheckpoint(true)
+        val grown = selected.unionByName(pick).localCheckpoint(true)
+        Iterate.release(selected)
+        selected = grown
         val covered = residual
           .join(broadcast(pick.select(col("doc"))), Seq("doc"))
           .select(col("feat"))
@@ -647,11 +650,13 @@ object CorpusAssembly {
           .join(broadcast(pick.select(col("doc"))), Seq("doc"), "left_anti")
           .join(covered, Seq("feat"), "left_anti")
           .localCheckpoint(true)
-        residual.unpersist(blocking = false)
+        Iterate.release(residual)
         residual = next
       }
+      Iterate.release(pick)
       r += 1
     }
+    Iterate.release(residual)
     dt.unpersist(blocking = false)
     selected
   }

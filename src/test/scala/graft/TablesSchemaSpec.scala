@@ -24,6 +24,15 @@ class TablesSchemaSpec extends SparkSpec {
       "a second load of an unchanged table must reuse its schema")
   }
 
+  test("a load leaves the session's confs unchanged") {
+    val dir = Files.createTempDirectory("graft_tables_pure").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val fresh = spark.newSession()
+    val before = fresh.conf.getAll
+    Tables.load(fresh, dir, "t").collect()
+    assert(fresh.conf.getAll == before)
+  }
+
   test("an in-place rewrite is seen by the next load") {
     val dir = Files.createTempDirectory("graft_tables_rewrite").toString
     val path = s"$dir/t.parquet"

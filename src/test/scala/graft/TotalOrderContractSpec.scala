@@ -59,7 +59,10 @@ class TotalOrderContractSpec extends SparkSpec {
     // total order is asserted by the bespoke test below.
     val bespoke = Set("q_scd2")
     val offenders = scala.collection.mutable.SortedMap.empty[String, String]
+    val confChanges =
+      scala.collection.mutable.SortedMap.empty[String, Set[(String, String)]]
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1) if !bespoke(name)) {
+      val confs = spark.conf.getAll
       val df = fn(spark, dir)
       topSort(df.queryExecution.analyzed) match {
         case None =>
@@ -81,12 +84,17 @@ class TotalOrderContractSpec extends SparkSpec {
                 "output order rides encounter order, the q_unpivot flake"
           }
       }
+      // session purity rides the same single run of each query
+      val after = spark.conf.getAll
+      if (after != confs) confChanges(name) =
+        (after.toSet diff confs.toSet) ++ (confs.toSet diff after.toSet)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }
     assert(offenders.isEmpty,
       s"non-total final sorts:\n${offenders.map { case (q, why) => s"  $q: $why" }.mkString("\n")}")
+    assert(confChanges.isEmpty, s"queries that changed session confs: $confChanges")
   }
 
   test("q_scd2's total order holds through the dropped micro-timestamp column") {

@@ -20,6 +20,15 @@ class BpeSpec extends SparkSpec {
     assert(mergeStep(Seq.empty[String], "a", "a") == Seq.empty[String])
   }
 
+  test("train leaves no checkpoint persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val docs = Seq("low low lower newest newest widest").toDF("text")
+    assert(Bpe.train(docs, "text", nMerges = 3, minCount = 1L).merges.size == 3)
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    assert(fresh.isEmpty, s"persistent RDDs left by train: $fresh")
+  }
+
   test("train: hand-checkable Sennrich-style corpus") {
     // word counts: low ×5, lower ×2, newest ×6, widest ×3
     val docs = Seq(

@@ -434,6 +434,22 @@ class CorpusAssemblySpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, 1L, 4L), (2L, 3L, 2L)))
   }
 
+  test("greedyCoverSelect leaves exactly one checkpoint persisted: the result's") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val df = Seq((1L, "a"), (1L, "b"), (2L, "b"), (2L, "c"), (3L, "d"))
+      .toDF("doc", "feat")
+    val out = CorpusAssembly.greedyCoverSelect(df, k = 4)
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    val resultRdds = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(fresh.size == 1 && resultRdds == Seq(fresh.head),
+      s"fresh persistent RDDs $fresh, result reads $resultRdds")
+    assert(out.count() == 3)
+    graft.graph.Iterate.release(out)
+  }
+
   test("budgetWaterfill matches the max-feasible-level reference on random instances") {
     // The closed-form segment level must equal the LARGEST integer L
     // with Σ min(tᵢ, L) ≤ budget (or alloc = tᵢ exactly when the budget
