@@ -2,9 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-
-import graft.expr.{DotI64, NfkcNormalize, RollingHash64, SimHash64, WordShingles, ZOrder2}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Spark extensions entry point — the deployment-grade way to install
   * graft's native expressions into every session of a cluster:
@@ -13,50 +11,25 @@ import graft.expr.{DotI64, NfkcNormalize, RollingHash64, SimHash64, WordShingles
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * after which `nfkc`, `simhash64`, `rolling_hash64`, `word_shingles` and
-  * `dot_i64` resolve in SQL text as well as through [[GraftFunctions]]'s
-  * Column API. [[GraftFunctions.register]] remains as the programmatic
-  * per-session fallback used by [[Tables.load]] (no config required).
+  * after which every function of [[GraftFunctions]] resolves in SQL text
+  * as well as through its Column API. [[GraftFunctions.register]] remains
+  * as the programmatic per-session fallback used by [[Tables.load]] (no
+  * config required).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftFunctions.builders.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name,
+          s"$name(...) - graft native expression (see graft.GraftFunctions).",
+          "", "", "", "", "", "", "built-in"),
+        builder))
+    }
     // Whole-operator extension: the as-of join planner strategy
     // (graft.plans.AsOfJoinNode → AsOfJoinExec) plus the optimizer rule
     // pushing left-side filters through the node.
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
   }
-}
-
-object GraftExtensions {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
-
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("nfkc"),
-      info("nfkc", "nfkc(str) - Unicode NFKC normalization."),
-      (exprs: Seq[Expression]) => NfkcNormalize(exprs.head)),
-    (FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(array<string>) - 64-bit SimHash fingerprint."),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)),
-    (FunctionIdentifier("rolling_hash64"),
-      info("rolling_hash64", "rolling_hash64(str) - order-sensitive 64-bit fingerprint."),
-      (exprs: Seq[Expression]) => RollingHash64(exprs.head)),
-    (FunctionIdentifier("dot_i64"),
-      info("dot_i64", "dot_i64(array<bigint>, array<bigint>) - integer dot product."),
-      (exprs: Seq[Expression]) => DotI64(exprs(0), exprs(1))),
-    (FunctionIdentifier("z_order2"),
-      info("z_order2", "z_order2(bigint, bigint) - 64-bit Morton (Z-order) key."),
-      (exprs: Seq[Expression]) => ZOrder2(exprs(0), exprs(1))),
-    (FunctionIdentifier("word_shingles"),
-      info("word_shingles", "word_shingles(str, n) - distinct word n-gram shingles."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c, Literal(n: Int, _)) => WordShingles(c, n)
-        case _ => throw new IllegalArgumentException("word_shingles(stringCol, intLiteral)")
-      }),
-  )
 }

@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions.call_function
 
-import graft.expr.{AcFindAll, BpeMergeStep, BpeTokens, DamerauLevenshtein, DotI64, NfkcNormalize, RollingHash64, SimHash64, WordShingles, WordpieceTokens, ZOrder2}
+import graft.expr.{AcFindAll, BpeMergeStep, BpeTokens, DamerauLevenshtein, DotI64, NfkcNormalize, SimHash64, WordShingles, WordpieceTokens, ZOrder2}
 
 /** Registration of graft's native Catalyst expressions.
   *
@@ -11,14 +12,14 @@ import graft.expr.{AcFindAll, BpeMergeStep, BpeTokens, DamerauLevenshtein, DotI6
   * supported path is: register an expression builder in the session's
   * FunctionRegistry, then build columns with `call_function`. Registration
   * is idempotent and cheap; `Tables.load` calls it so every query entry
-  * point gets the functions without extra ceremony.
+  * point gets the functions without extra ceremony. [[GraftExtensions]]
+  * injects the same list.
   */
 object GraftFunctions {
-  private val builders: Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+  private[graft] val builders: Seq[(String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
       org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
     "nfkc" -> (exprs => NfkcNormalize(exprs.head)),
     "simhash64" -> (exprs => SimHash64(exprs.head)),
-    "rolling_hash64" -> (exprs => RollingHash64(exprs.head)),
     "dot_i64" -> (exprs => DotI64(exprs(0), exprs(1))),
     "damerau_levenshtein" -> (exprs => DamerauLevenshtein(exprs(0), exprs(1))),
     "z_order2" -> (exprs => ZOrder2(exprs(0), exprs(1))),
@@ -68,16 +69,14 @@ object GraftFunctions {
     parts.grouped(2).map(p => (p(0), p(1))).toSeq
   }
 
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-
+  /** Registers every native function the session's own registry lacks —
+    * idempotent, and it keeps no state outside the session.
+    */
   def register(spark: SparkSession): Unit = {
-    if (registered.add(spark)) {
-      val registry = spark.sessionState.functionRegistry
-      builders.foreach { case (name, builder) =>
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
         registry.createOrReplaceTempFunction(name, builder, "built-in")
-      }
     }
   }
 
@@ -86,9 +85,6 @@ object GraftFunctions {
 
   /** 64-bit SimHash of an array<string> token column. */
   def simhash64(tokens: Column): Column = call_function("simhash64", tokens)
-
-  /** Order-sensitive 64-bit polynomial fingerprint of a string. */
-  def rollingHash64(c: Column): Column = call_function("rolling_hash64", c)
 
   /** Distinct word n-gram shingles of a pre-normalized string. */
   def wordShingles(c: Column, n: Int): Column =

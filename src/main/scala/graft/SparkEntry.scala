@@ -1699,18 +1699,14 @@ object SparkEntry {
       .orderBy(col("doc"))
   }
 
-  /** MinHash+LSH near-dup pairs, fully hash-oracled: `replayable = true`
-    * swaps the Spark-internal xxhash64 family for a seeded-md5 base hash
-    * + affine permutations mod 2⁶¹−1 (exact decimal arithmetic DuckDB
-    * replays in HUGEINT), so the ORACLE REPRODUCES THE BANDING — which
-    * candidate pairs collide, not just the Jaccard filter. Production
-    * callers keep the default xxhash64 family (same plan shape, cheaper
-    * hashes); MinhashSpec pins that both families find the planted
-    * duplicates.
+  /** MinHash+LSH near-dup pairs, fully hash-oracled: the MinHash family
+    * is a seeded-md5 base hash + affine permutations mod 2⁶¹−1 (exact
+    * decimal arithmetic DuckDB replays in HUGEINT), so the ORACLE
+    * REPRODUCES THE BANDING — which candidate pairs collide, not just the
+    * Jaccard filter. DedupSpec pins that it finds the planted duplicates.
     */
   private def qDedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text",
-        replayable = true)
+    Dedup.minhashLshPairs(t(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("id_a"), col("id_b"))
 
   /** SimHash near-dup pairs (native fingerprint expression).
@@ -1750,7 +1746,7 @@ object SparkEntry {
     * dimension inflates the gap term, r16). DuckDB recomputes the
     * exact column and asserts the boolean all-true — the same
     * exact-twin-plus-bound recipe as q_approx_percentile/_distinct.
-    * Production callers use [[Similarity.robustNormalizeApprox]] alone
+    * Production callers use [[Similarity.robustNormalizeApproxRows]] alone
     * (one pass, no exact join); the exact join here IS the verification.
     */
   private def qEmbedNormalizeApprox(s: SparkSession, dir: String): DataFrame = {
@@ -1823,13 +1819,12 @@ object SparkEntry {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** LSH-bucketed approximate top-k, fully hash-oracled: `replayable =
-    * true` buckets on md5-parity Rademacher hyperplanes with exact
-    * integer sign tests (the signMatrix family q_random_project already
-    * replays in SQL), so the oracle reproduces the bucketing AND the
-    * hamming-1 multi-probe — which candidates each query sees, then the
-    * exact re-rank. The Gaussian family stays the API default;
-    * SimilaritySpec pins recall against brute force for both.
+  /** LSH-bucketed approximate top-k, fully hash-oracled: lshTopK
+    * buckets on md5-parity Rademacher hyperplanes with exact integer
+    * sign tests (the signMatrix family q_random_project already replays
+    * in SQL), so the oracle reproduces the bucketing AND the hamming-1
+    * multi-probe — which candidates each query sees, then the exact
+    * re-rank. SimilaritySpec pins recall against brute force.
     */
   private def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
@@ -1842,7 +1837,7 @@ object SparkEntry {
     val actual = emb.select(size(col("embedding"))).head().getInt(0)
     require(actual == dim, s"embedding width $actual != pinned LSH dim $dim")
     Similarity.lshTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 5,
-        nPlanes = 4, dim = dim, replayable = true)
+        nPlanes = 4, dim = dim)
       .orderBy(col("query_id"), col("rank"))
   }
 

@@ -72,7 +72,7 @@ object Tables {
     * not conventional).
     *
     * The listing is collected and SORTED by full URI before folding:
-    * `fs.listFiles` iteration order is not guaranteed stable across
+    * listing order is not guaranteed stable across
     * Hadoop stores (a reordered listing of identical files must not
     * re-key the cache and force a spurious retrain). The full URI — not
     * just the basename — enters the hash, so a file moved between
@@ -86,12 +86,16 @@ object Tables {
   def snapshotId(spark: SparkSession, sfDir: String, table: String): String = {
     val path = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: listFiles builds LocatedFileStatus
+    // objects, and on the local file system their permission fields
+    // fork an `ls -ld` per file; only path, length and mtime are read.
     val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val st = it.next()
-      entries += ((st.getPath.toUri.toString, st.getLen, st.getModificationTime))
-    }
+    def walk(p: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(p).foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else entries += ((st.getPath.toUri.toString, st.getLen, st.getModificationTime))
+      }
+    walk(path)
     var h = 1125899906842597L // deterministic FNV-ish fold over the sorted listing
     var bytes = 0L
     for ((p, len, mtime) <- entries.sortBy(_._1)) {

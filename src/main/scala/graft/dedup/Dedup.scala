@@ -46,41 +46,14 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
 
-  /** MinHash signature: `numHashes` independent min-hashes over the shingle
-    * set. Implemented with the xxhash64 built-in seeded per permutation.
-    *
-    * NOTE: array-level form — convenient for small frames and property
-    * tests, but `transform`/`array_min` are higher-order functions that
-    * Spark evaluates interpreted (no codegen). The corpus-scale path is
-    * [[minhashSignatures]], which hashes each shingle once and folds the
-    * permutations inside codegen'd aggregates.
-    */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shinglesCol, s => xxhash64(lit(i), s)))
-    }: _*)
-
-  /** Corpus-scale MinHash: `(doc, shingle-array)` → `(doc, sig array)`.
-    * One codegen'd xxhash64 over the shingle string, then numHashes
-    * re-hashes of that long (xxhash64 seeded per permutation — hashing a
-    * fixed-width long is far cheaper than hashing the string itself, and
-    * avoids ANSI overflow semantics an affine a·x+b family would hit) as
-    * min-aggregates over the exploded rows. Everything stays inside
-    * whole-stage codegen, and the shuffle carries the narrow (doc, hash)
-    * pair instead of shingle text.
-    */
-  def minhashSignatures(sets: DataFrame, docCol: String, shCol: String,
-      numHashes: Int): DataFrame =
-    minhashSignatures(sets, docCol, shCol, numHashes, replayable = false)
-
-  /** Mersenne prime 2⁶¹−1 — the modulus of the replayable affine MinHash
-    * family (universal hashing over the prime field GF(M61)).
+  /** Mersenne prime 2⁶¹−1 — the modulus of the affine MinHash family
+    * (universal hashing over the prime field GF(M61)).
     */
   val MinhashPrime: Long = (1L << 61) - 1
 
   /** Deterministic affine coefficients (aᵢ ∈ [1, p−1], bᵢ ∈ [0, p−1]) of
-    * the replayable MinHash family, derived from md5 of a fixed seed
-    * string per permutation — pure driver-side arithmetic, so the oracle
+    * the MinHash family, derived from md5 of a fixed seed string per
+    * permutation — pure driver-side arithmetic, so the oracle
     * generator computes the SAME constants and bakes them into SQL text.
     */
   def minhashCoeffs(numHashes: Int): IndexedSeq[(Long, Long)] = {
@@ -102,10 +75,8 @@ object Dedup {
     conv(substring(md5(concat(lit("mh:"), s)), 1, 15), 16, 10)
       .cast("decimal(19,0)")
 
-  /** [[minhashSignatures]] with a hash-family switch. The default
-    * (xxhash64 base hash + per-permutation re-hash) is the production
-    * path — fastest, but Spark-internal. `replayable = true` swaps in a
-    * seeded-md5 base hash and the textbook affine permutations
+  /** Corpus-scale MinHash: `(doc, shingle-array)` → `(doc, sig array)`.
+    * A seeded-md5 base hash and the textbook affine permutations
     * `(aᵢ·h + bᵢ) mod (2⁶¹−1)` in exact decimal(38,0) arithmetic
     * (h < 2⁶⁰, aᵢ < 2⁶¹ ⇒ the product is < 2¹²¹ ≈ 37 digits — inside
     * decimal(38,0) and DuckDB's HUGEINT, so ANSI mode never overflows
@@ -125,32 +96,24 @@ object Dedup {
     * same stage in ~1.5-3.5 s vs ~13 s for per-occurrence hashing.
     */
   def minhashSignatures(sets: DataFrame, docCol: String, shCol: String,
-      numHashes: Int, replayable: Boolean): DataFrame = {
-    // Null shingle entries drop in BOTH families (wordShingles never
-    // emits them; a caller-supplied array might): without the filter the
-    // replayable inner join would silently lose all-null-shingle docs
-    // while xxhash64 kept them — the families must agree on row count.
+      numHashes: Int): DataFrame = {
+    // Null shingle entries drop (wordShingles never emits them; a
+    // caller-supplied array might): the inner join below would otherwise
+    // decide an all-null-shingle doc's fate by join semantics.
     val ex0 = sets.select(col(docCol), explode(col(shCol)).as("s"))
       .filter(col("s").isNotNull)
-    val (joined, mins) =
-      if (replayable) {
-        val coeffs = minhashCoeffs(numHashes)
-        val perms = (0 until numHashes).map { i =>
-          val (a, b) = coeffs(i)
-          pmod(col("h") * lit(BigDecimal(a)) + lit(BigDecimal(b)),
-            lit(BigDecimal(MinhashPrime))).cast("long").as(s"_p$i")
-        }
-        val hv = ex0.select(col("s")).distinct()
-          .withColumn("h", md5Hash60(col("s")))
-          .select(col("s") +: perms: _*)
-        (ex0.join(hv.hint("shuffle_hash"), "s"),
-          (0 until numHashes).map(i => min(col(s"_p$i")).as(s"_m$i")))
-      } else {
-        (ex0.withColumn("h", xxhash64(col("s"))),
-          (0 until numHashes).map(i =>
-            min(xxhash64(lit(i), col("h"))).as(s"_m$i")))
-      }
-    joined.groupBy(col(docCol))
+    val coeffs = minhashCoeffs(numHashes)
+    val perms = (0 until numHashes).map { i =>
+      val (a, b) = coeffs(i)
+      pmod(col("h") * lit(BigDecimal(a)) + lit(BigDecimal(b)),
+        lit(BigDecimal(MinhashPrime))).cast("long").as(s"_p$i")
+    }
+    val hv = ex0.select(col("s")).distinct()
+      .withColumn("h", md5Hash60(col("s")))
+      .select(col("s") +: perms: _*)
+    val mins = (0 until numHashes).map(i => min(col(s"_p$i")).as(s"_m$i"))
+    ex0.join(hv.hint("shuffle_hash"), "s")
+      .groupBy(col(docCol))
       .agg(mins.head, mins.tail: _*)
       .select(col(docCol),
         array((0 until numHashes).map(i => col(s"_m$i")): _*).as("sig"))
@@ -174,8 +137,7 @@ object Dedup {
       shingleN: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      threshold: Double = 0.8,
-      replayable: Boolean = false): DataFrame = {
+      threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
     val r = numHashes / bands
 
@@ -191,18 +153,15 @@ object Dedup {
     val sets = df
       .select(col(idCol).as("doc"), shingles(col(textCol), shingleN).as("sh"))
       .persist()
-    val sigs = minhashSignatures(sets, "doc", "sh", numHashes, replayable)
+    val sigs = minhashSignatures(sets, "doc", "sh", numHashes)
 
-    // Band key: replayable mode compresses the band's r min-hash values
-    // through md5 of their comma-joined decimal form (replayed in DuckDB
-    // as md5(string_agg(...))); production mode keeps Spark's native
-    // hash(). Either way the join is a plain equi-join on (band, key).
+    // Band key: md5 of the band's r min-hash values in comma-joined
+    // decimal form (replayed in DuckDB as md5(string_agg(...))); the join
+    // is a plain equi-join on (band, key).
     def bandKey(b: Int): Column =
-      if (replayable)
-        md5(concat_ws(",",
-          (b * r until (b + 1) * r).map(j =>
-            element_at(col("sig"), j + 1).cast("string")): _*))
-      else hash(slice(col("sig"), b * r + 1, r)).cast("string")
+      md5(concat_ws(",",
+        (b * r until (b + 1) * r).map(j =>
+          element_at(col("sig"), j + 1).cast("string")): _*))
     val bandKeys = array((0 until bands).map { b =>
       struct(lit(b).as("band"), bandKey(b).as("bk"))
     }: _*)

@@ -41,19 +41,6 @@ object AsOfJoin {
       valueCols: Seq[String]): DataFrame =
     merged(left, right, Seq(leftKey), Seq(rightKey), leftTs, rightTs, valueCols, forward = false)
 
-  /** Composite-key backward as-of (e.g. (exchange, symbol) time series) —
-    * the physical operator clusters and sorts on all key columns.
-    */
-  def backwardMergeKeys(
-      left: DataFrame,
-      right: DataFrame,
-      leftKeys: Seq[String],
-      rightKeys: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String]): DataFrame =
-    merged(left, right, leftKeys, rightKeys, leftTs, rightTs, valueCols, forward = false)
-
   /** Earliest right row at-or-after each left row, per key — physical
     * sort-merge operator; same semantics as [[forward]].
     */
@@ -156,7 +143,7 @@ object AsOfJoin {
     * Null timestamps: rows with a null ts land in the null bucket and
     * never match (unlike the direct forms, where a null right ts sorts as
     * the smallest value) — for time-series data a null timestamp is a
-    * data defect, so the bucketed forms treat it as unmatched rather than
+    * data defect, so the bucketed form treats it as unmatched rather than
     * "before everything".
     */
   def backwardMergeBucketed(
@@ -167,35 +154,7 @@ object AsOfJoin {
       leftTs: String,
       rightTs: String,
       valueCols: Seq[String],
-      tsBucket: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-    bucketed(left, right, leftKey, rightKey, leftTs, rightTs, valueCols,
-      tsBucket, forward = false)
-
-  /** Skew-proof forward as-of — see [[backwardMergeBucketed]]; carry-in
-    * rows come from strictly LATER buckets (per-bucket argmin).
-    */
-  def forwardMergeBucketed(
-      left: DataFrame,
-      right: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String],
-      tsBucket: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-    bucketed(left, right, leftKey, rightKey, leftTs, rightTs, valueCols,
-      tsBucket, forward = true)
-
-  private def bucketed(
-      left: DataFrame,
-      right: DataFrame,
-      leftKey: String,
-      rightKey: String,
-      leftTs: String,
-      rightTs: String,
-      valueCols: Seq[String],
-      tsBucket: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      forward: Boolean): DataFrame = {
+      tsBucket: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     val lb = "_graft_asof_lb"
     val rb = "_graft_asof_rb"
     require(!(valueCols :+ leftKey :+ leftTs).exists(Seq(lb, rb).contains),
@@ -208,9 +167,9 @@ object AsOfJoin {
       .withColumn(rb, tsBucket(Cols.q(rightTs)))
 
     // Per-(key, bucket) boundary winner: the row the merge would keep if
-    // the bucket were scanned to its edge — argmax (backward) / argmin
-    // (forward) of (ts, orderable values, content hash), the exact
-    // tiebreak rule of the merge exec and the window form.
+    // the bucket were scanned to its edge — argmax of (ts, orderable
+    // values, content hash), the exact tiebreak rule of the merge exec
+    // and the window form.
     val orderableCols = valueCols.filter(c =>
       org.apache.spark.sql.catalyst.expressions.RowOrdering
         .isOrderable(right.schema(c).dataType))
@@ -219,42 +178,32 @@ object AsOfJoin {
       orderableCols.map(c => Cols.q(c).as(c)) :+ contentHash.as("_h")): _*)
     val payload = struct((Cols.q(rightTs).as("_ts") +:
       valueCols.map(c => Cols.q(c).as(c))): _*)
-    val pickWinner = if (forward) min_by(payload, ord) else max_by(payload, ord)
     val winners = rightB
       .groupBy(Cols.q(rightKey).as("_k"), col(rb).as("_b"))
-      .agg(pickWinner.as("_w"))
+      .agg(max_by(payload, ord).as("_w"))
 
     // Bucket-level carry: for each (key, bucket) the LEFT side touches,
-    // the winner of the nearest earlier (backward) / later (forward)
-    // non-empty right bucket. One window over per-bucket aggregates. Side
-    // ordering keeps the same-bucket winner OUT of the frame: backward
-    // sorts the left marker before the winner at an equal bucket and looks
-    // strictly back; forward sorts it after and looks strictly ahead.
+    // the winner of the nearest earlier non-empty right bucket. One window
+    // over per-bucket aggregates. Side ordering keeps the same-bucket
+    // winner OUT of the frame: the left marker sorts before the winner at
+    // an equal bucket and the frame looks strictly back.
     val needs = leftB.filter(Cols.q(leftKey).isNotNull)
       .select(Cols.q(leftKey).as("_k"), col(lb).as("_b")).distinct()
     val wType = winners.schema("_w").dataType
-    val (leftSide, winnerSide) = if (forward) (1, 0) else (0, 1)
-    val tagged = winners.withColumn("_side", lit(winnerSide))
+    val tagged = winners.withColumn("_side", lit(1))
       .unionByName(needs
         .withColumn("_w", lit(null).cast(wType))
-        .withColumn("_side", lit(leftSide)))
+        .withColumn("_side", lit(0)))
     val orderedB = Window.partitionBy(col("_k")).orderBy(col("_b"), col("_side"))
-    val pickCarry =
-      if (forward)
-        first(col("_w"), ignoreNulls = true)
-          .over(orderedB.rowsBetween(1, Window.unboundedFollowing))
-      else
-        last(col("_w"), ignoreNulls = true)
-          .over(orderedB.rowsBetween(Window.unboundedPreceding, -1))
     val carry = tagged
-      .withColumn("_cw", pickCarry)
-      .filter(col("_side") === leftSide && col("_cw").isNotNull)
+      .withColumn("_cw", last(col("_w"), ignoreNulls = true)
+        .over(orderedB.rowsBetween(Window.unboundedPreceding, -1)))
+      .filter(col("_side") === 0 && col("_cw").isNotNull)
       .select(col("_k"), col("_b"), col("_cw"))
 
     // Re-expand carries to right-shaped rows addressed to the left bucket
     // (their real ts keeps them at the correct end of the bucket's scan
-    // order: earlier-bucket ts sorts before every in-bucket row backward,
-    // later-bucket ts after every in-bucket row forward).
+    // order: an earlier-bucket ts sorts before every in-bucket row).
     val rightShape = rightB.select((Seq(Cols.q(rightKey), col(rb), Cols.q(rightTs)) ++
       valueCols.map(Cols.q)): _*)
     val carryRows = carry.select((Seq(
@@ -263,7 +212,8 @@ object AsOfJoin {
       valueCols.map(c => col("_cw").getField(c).as(c))): _*)
 
     merged(leftB, rightShape.unionByName(carryRows),
-        Seq(leftKey, lb), Seq(rightKey, rb), leftTs, rightTs, valueCols, forward)
+        Seq(leftKey, lb), Seq(rightKey, rb), leftTs, rightTs, valueCols,
+        forward = false)
       .drop(lb)
   }
 

@@ -50,58 +50,6 @@ object RobustStats {
       .drop("_rs_med", "_rs_mad")
   }
 
-  /** Sketched twin of [[madOutliers]] for the 100 TB path: both medians
-    * via `percentile_approx` (Greenwald–Khanna, bounded per-group
-    * memory) instead of the exact percentile's full-group buffering —
-    * the robustNormalizeApprox pairing. GK returns an OBSERVED value
-    * where the exact form interpolates, so flags can differ only for
-    * rows within one inter-sample gap of the fence;
-    * RobustStatsApproxSpec pins the fence drift on the test tables.
-    * Identical output contract — call sites swap freely.
-    */
-  def madOutliersApprox(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, k: Double = 3.0, accuracy: Int = 10000): DataFrame = {
-    require(groupCols.nonEmpty, "madOutliersApprox needs group columns")
-    val g = groupCols.map(col)
-    // same persisted threshold relations as the exact twin (see above)
-    val med = df.groupBy(g: _*)
-      .agg(round(percentile_approx(col(valueCol), lit(0.5), lit(accuracy))
-        .cast("double"), 4).as("_rs_med"))
-      .persist()
-    val withMed = df.join(med, groupCols)
-    val mad = withMed.groupBy(g: _*)
-      .agg(round(percentile_approx(abs(col(valueCol) - col("_rs_med")),
-        lit(0.5), lit(accuracy)).cast("double"), 4).as("_rs_mad"))
-      .persist()
-    withMed.join(mad, groupCols)
-      .withColumn("is_outlier",
-        abs(col(valueCol) - col("_rs_med")) > lit(k) * col("_rs_mad"))
-      .drop("_rs_med", "_rs_mad")
-  }
-
-  /** Trimmed and winsorized means per group — the two standard robust
-    * location estimates next to the median: trimming DROPS values outside
-    * the [loPct, hiPct] quantiles, winsorizing CLAMPS them to those
-    * quantiles (every row still votes, extreme rows just vote at the
-    * fence).
-    *
-    * Deterministic cross-engine by integer fixed-point arithmetic
-    * end-to-end: values and quantile fences are quantized to 10⁻⁴ units
-    * (exact for any input with ≤4 decimal digits — floating sums of such
-    * values ARE order-dependent, long sums are not), comparisons/clamps
-    * run in long space, and each mean is one exact integer floor-division
-    * reported in 10⁻⁶ units. Returns one row per group:
-    * `(groupCols*, n, n_kept, trimmed_mean_micro, winsor_mean_micro)`;
-    * `trimmed_mean_micro` is NULL for the degenerate group whose trim
-    * window contains no actual value (possible at tiny n — the fences
-    * interpolate between observations).
-    *
-    * Scale: one exact grouped percentile pass (buffers each group's
-    * values — the honest exact-quantile cost, same pairing as
-    * q_percentiles: swap in [[graft.sketch.Sketches.binnedQuantiles]]
-    * fences at 100 TB group widths) + a broadcast-size join of the
-    * |groups|-row fence relation + one final hash aggregation.
-    */
   /** Empirical-Bayes shrunk group means: each group's mean is pulled
     * toward the global mean with the strength of `priorWeight` pseudo-
     * observations — `shrunk = (n·mean_g + k·mean_global) / (n + k)` —
@@ -139,26 +87,31 @@ object RobustStats {
           s" div (_rs_gn * (n + $priorWeight))").as("shrunk_micro"))): _*)
   }
 
-  def trimmedStats(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      loPct: Double = 0.05, hiPct: Double = 0.95): DataFrame =
-    trimmedStatsWith(df, groupCols, valueCol, loPct, hiPct,
-      (c, p) => percentile(c, lit(p)))
-
-  /** Sketched twin of [[trimmedStats]]: quantile fences via
-    * `percentile_approx` — bounded per-group memory at 100 TB group
-    * widths, same exact integer trim/winsor arithmetic downstream
-    * (the fences move by at most one inter-sample gap, the GK-observed
-    * vs interpolated difference; RobustStatsApproxSpec pins it).
+  /** Trimmed and winsorized means per group — the two standard robust
+    * location estimates next to the median: trimming DROPS values outside
+    * the [loPct, hiPct] quantiles, winsorizing CLAMPS them to those
+    * quantiles (every row still votes, extreme rows just vote at the
+    * fence).
+    *
+    * Deterministic cross-engine by integer fixed-point arithmetic
+    * end-to-end: values and quantile fences are quantized to 10⁻⁴ units
+    * (exact for any input with ≤4 decimal digits — floating sums of such
+    * values ARE order-dependent, long sums are not), comparisons/clamps
+    * run in long space, and each mean is one exact integer floor-division
+    * reported in 10⁻⁶ units. Returns one row per group:
+    * `(groupCols*, n, n_kept, trimmed_mean_micro, winsor_mean_micro)`;
+    * `trimmed_mean_micro` is NULL for the degenerate group whose trim
+    * window contains no actual value (possible at tiny n — the fences
+    * interpolate between observations).
+    *
+    * Scale: one exact grouped percentile pass (buffers each group's
+    * values — the honest exact-quantile cost, same pairing as
+    * q_percentiles: swap in [[graft.sketch.Sketches.binnedQuantiles]]
+    * fences at 100 TB group widths) + a broadcast-size join of the
+    * |groups|-row fence relation + one final hash aggregation.
     */
-  def trimmedStatsApprox(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, loPct: Double = 0.05, hiPct: Double = 0.95,
-      accuracy: Int = 10000): DataFrame =
-    trimmedStatsWith(df, groupCols, valueCol, loPct, hiPct,
-      (c, p) => percentile_approx(c, lit(p), lit(accuracy)).cast("double"))
-
-  private def trimmedStatsWith(df: DataFrame, groupCols: Seq[String],
-      valueCol: String, loPct: Double, hiPct: Double,
-      pct: (org.apache.spark.sql.Column, Double) => org.apache.spark.sql.Column): DataFrame = {
+  def trimmedStats(df: DataFrame, groupCols: Seq[String], valueCol: String,
+      loPct: Double = 0.05, hiPct: Double = 0.95): DataFrame = {
     require(groupCols.nonEmpty, "trimmedStats needs group columns")
     require(0.0 <= loPct && loPct < hiPct && hiPct <= 1.0,
       s"need 0 <= loPct < hiPct <= 1, got ($loPct, $hiPct)")
@@ -166,8 +119,8 @@ object RobustStats {
     val v4 = round(col(valueCol) * 10000).cast("long")
     val rows = df.filter(col(valueCol).isNotNull)
     val fences = rows.groupBy(g: _*).agg(
-      round(pct(col(valueCol), loPct) * 10000).cast("long").as("_rs_lo4"),
-      round(pct(col(valueCol), hiPct) * 10000).cast("long").as("_rs_hi4"))
+      round(percentile(col(valueCol), lit(loPct)) * 10000).cast("long").as("_rs_lo4"),
+      round(percentile(col(valueCol), lit(hiPct)) * 10000).cast("long").as("_rs_hi4"))
     rows.select(g :+ v4.as("_rs_v4"): _*)
       .join(fences, groupCols)
       .groupBy(g: _*)

@@ -39,24 +39,6 @@ object SkewOps {
       .drop("_salt")
   }
 
-  /** Two-phase (salted) aggregation for heavily skewed group keys: partial
-    * aggregate on (key, salt), then final aggregate on key. Spark's
-    * hash-aggregate already does map-side partials; this adds an extra
-    * reduce tier for the pathological case where even one reducer per key
-    * is too much (billions of rows behind a handful of keys).
-    */
-  def saltedCountSum(
-      df: DataFrame,
-      keyCol: String,
-      valueCol: String,
-      saltFactor: Int = 8): DataFrame =
-    df.withColumn("_salt",
-        pmod(xxhash64(Cols.q(valueCol)), lit(saltFactor)).cast("int"))
-      .groupBy(Cols.q(keyCol), col("_salt"))
-      .agg(count(lit(1)).as("_n"), sum(Cols.q(valueCol)).as("_s"))
-      .groupBy(Cols.q(keyCol))
-      .agg(sum(col("_n")).as("n"), sum(col("_s")).as("sum"))
-
   /** Heavy-hitter (key-skew) report: the `topK` most frequent values of
     * `keyCol` per group, with each key's share of the group's rows and
     * the running (cumulative) share in micro units — the diagnostic a

@@ -60,7 +60,7 @@ object Similarity {
 
   /** Symmetric per-vector int8 quantization AUDIT — the storage-
     * compression decision relation for an embedding corpus (4×
-    * smaller than float32; the vector-DB default next to [[pqTopK]]'s
+    * smaller than float32; the vector-DB default next to [[pqTopKWith]]'s
     * one-byte-per-subspace codes): per vector, the int8 scale
     * `s = max(⌈max|x| / 127⌉, 1)` over the micro-quantized
     * coordinates, and the EXACT reconstruction error of
@@ -105,53 +105,21 @@ object Similarity {
     *
     * Vectors quantize first ([[quantize]]) so every percentile input is
     * an exact long and the interpolated medians are exact in double;
-    * the division order is pinned for the oracle. Output
-    * `(id, norm: array<long>)`, reassembled in dimension order.
+    * the division order is pinned for the oracle. Output one scalar row
+    * per `(id, dim, nm)` with `dim` 1-based — the shape downstream scalar
+    * consumers (and the driver's row-wise comparator) want.
     *
     * Scale: one posexplode → |dims| exact-percentile groups (buffers a
-    * dimension's values — the honest exact-quantile cost; swap in
-    * binnedQuantiles fences at 100 TB corpus widths, the q_percentiles
-    * pairing), a broadcast |dims|-row stats relation back onto the
-    * exploded frame, and one per-vector reassembly aggregation.
-    */
-  def robustNormalize(df: DataFrame, idCol: String, vecCol: String,
-      quantScale: Int = 1000): DataFrame =
-    robustNormalizeRows(df, idCol, vecCol, quantScale)
-      .groupBy(col("id"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("nm")))),
-        x => x.getField("nm")).as("norm"))
-
-  /** Exploded form of [[robustNormalize]]: one scalar row per
-    * `(id, dim, nm)` with `dim` 1-based — the shape downstream scalar
-    * consumers (and the driver's row-wise comparator) want, WITHOUT the
-    * per-vector re-pack aggregation the array form pays (one fewer
-    * shuffle; the array form is this plus a collect_list groupBy).
+    * dimension's values — the honest exact-quantile cost; the sketched
+    * [[robustNormalizeApproxRows]] is the 100 TB form) and a broadcast
+    * |dims|-row stats relation back onto the exploded frame.
     */
   def robustNormalizeRows(df: DataFrame, idCol: String, vecCol: String,
-      quantScale: Int = 1000): DataFrame = {
-    val qz = df.select(col(idCol).as("id"),
-        posexplode(quantize(col(vecCol), quantScale)).as(Seq("dim", "q")))
-    // The |dims|-row stats relations persist (r18): the joined frame
-    // feeds the MAD aggregation AND the final projection, so an
-    // unpersisted median re-ran its full percentile pass per consumer
-    // (final plan showed 4 source scans; 3 is the floor — one per
-    // median level plus the flagging pass). Released via clearCache.
-    val med = qz.groupBy(col("dim"))
-      .agg(percentile(col("q"), lit(0.5)).as("_med"))
-      .persist()
-    val j = qz.join(broadcast(med), Seq("dim"))
-    val mad = j.groupBy(col("dim"))
-      .agg(percentile(abs(col("q").cast("double") - col("_med")), lit(0.5))
-        .as("_mad"))
-      .persist()
-    j.join(broadcast(mad), Seq("dim"))
-      .withColumn("nm", when(col("_mad") =!= 0.0,
-        floor(((col("q").cast("double") - col("_med")) / col("_mad"))
-          * lit(1000000.0)).cast("long")).otherwise(lit(0L)))
-      .select(col("id"), (col("dim") + 1).cast("long").as("dim"), col("nm"))
-  }
+      quantScale: Int = 1000): DataFrame =
+    robustNormalizeWith(df, idCol, vecCol, quantScale)(
+      c => percentile(c, lit(0.5)))
 
-  /** Sketched twin of [[robustNormalize]] for the 100 TB path: per-dim
+  /** Sketched twin of [[robustNormalizeRows]] for the 100 TB path: per-dim
     * median/MAD via `percentile_approx` (Greenwald–Khanna, bounded
     * per-group memory) instead of the exact percentile, which buffers a
     * whole dimension's values on one reducer — the same exact↔approx
@@ -160,36 +128,34 @@ object Similarity {
     * dimension's median lands within 0.01% rank of exact, which is far
     * inside the MAD denominator's own robustness margin.
     *
-    * Identical output contract to the exact form — `(id, norm:
-    * array<long>)` in floored micro-units over [[quantize]]d inputs — so
-    * call sites swap freely; RobustNormalizeApproxSpec pins approx==exact
-    * on the test tables (small-cardinality dims sketch exactly).
-    */
-  def robustNormalizeApprox(df: DataFrame, idCol: String, vecCol: String,
-      quantScale: Int = 1000, accuracy: Int = 10000): DataFrame =
-    robustNormalizeApproxRows(df, idCol, vecCol, quantScale, accuracy)
-      .groupBy(col("id"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("nm")))),
-        x => x.getField("nm")).as("norm"))
-
-  /** Exploded form of [[robustNormalizeApprox]]: one scalar row per
-    * `(id, dim, nm)` with `dim` 1-based — the [[robustNormalizeRows]]
-    * shape for the sketched path (and the shape the driver's row-wise
-    * comparator can sort, which array cells are not).
+    * Identical output contract to the exact form — `(id, dim, nm)` in
+    * floored micro-units over [[quantize]]d inputs — so call sites swap
+    * freely; RobustNormalizeApproxSpec pins approx==exact on the test
+    * tables (small-cardinality dims sketch exactly).
     */
   def robustNormalizeApproxRows(df: DataFrame, idCol: String, vecCol: String,
-      quantScale: Int = 1000, accuracy: Int = 10000): DataFrame = {
+      quantScale: Int = 1000, accuracy: Int = 10000): DataFrame =
+    robustNormalizeWith(df, idCol, vecCol, quantScale)(
+      c => percentile_approx(c, lit(0.5), lit(accuracy)).cast("double"))
+
+  /** The shared body of both normalizations; `median` is the per-dim
+    * percentile aggregate (exact or sketched) of a column.
+    */
+  private def robustNormalizeWith(df: DataFrame, idCol: String,
+      vecCol: String, quantScale: Int)(median: Column => Column): DataFrame = {
     val qz = df.select(col(idCol).as("id"),
         posexplode(quantize(col(vecCol), quantScale)).as(Seq("dim", "q")))
-    // same persisted |dims|-row stats relations as the exact twin
+    // The |dims|-row stats relations persist (r18): the joined frame
+    // feeds the MAD aggregation AND the final projection, so an
+    // unpersisted median re-ran its full percentile pass per consumer
+    // (final plan showed 4 source scans; 3 is the floor — one per
+    // median level plus the flagging pass). Released via clearCache.
     val med = qz.groupBy(col("dim"))
-      .agg(percentile_approx(col("q"), lit(0.5), lit(accuracy))
-        .cast("double").as("_med"))
+      .agg(median(col("q")).as("_med"))
       .persist()
     val j = qz.join(broadcast(med), Seq("dim"))
     val mad = j.groupBy(col("dim"))
-      .agg(percentile_approx(abs(col("q").cast("double") - col("_med")),
-        lit(0.5), lit(accuracy)).cast("double").as("_mad"))
+      .agg(median(abs(col("q").cast("double") - col("_med"))).as("_mad"))
       .persist()
     j.join(broadcast(mad), Seq("dim"))
       .withColumn("nm", when(col("_mad") =!= 0.0,
@@ -344,7 +310,7 @@ object Similarity {
     * corpus) leaves embeddings unchanged (identity, just re-scaled).
     *
     * Output: scalar `(id, dim, value_micro)` rows, 1-based dims (the
-    * robustNormalize contract — driver-comparator-sortable).
+    * robustNormalizeRows contract — driver-comparator-sortable).
     *
     * Scale: the component solve is [[topComponentVector]]'s one pass +
     * driver dim² solve; the correction itself is a pure projection with
@@ -718,20 +684,6 @@ object Similarity {
         StructField("cv", ArrayType(LongType)))))
   }
 
-  /** DataFrame view of [[ivfCentroidsLocal]] (cid, cv) for callers that
-    * want the centroid table as a relation.
-    */
-  def ivfCentroids(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      iters: Int = 2,
-      quantScale: Int = 1000,
-      trainFraction: Double = 1.0): DataFrame =
-    centroidsDF(corpus.sparkSession,
-      ivfCentroidsLocal(corpus, idCol, vecCol, k, iters, quantScale, trainFraction))
-
   /** Nearest-centroid (sim, -cid, cid) struct as a literal expression: max
     * picks the highest cosine, ties to the lowest cid. `vn` is the
     * caller's precomputed vector norm (compute it once, not per centroid).
@@ -756,34 +708,16 @@ object Similarity {
   private def nearestCid(v: Column, vn: Column, cents: Seq[(Int, IndexedSeq[Long])]): Column =
     nearestCell(v, vn, cents).getField("cid")
 
-  /** IVF approximate top-k: corpus vectors are indexed by nearest
+  /** IVF approximate top-k against a pre-trained centroid table
+    * ([[ivfCentroidsLocal]]): corpus vectors are indexed by nearest
     * centroid (a projection against the driver-resident centroid
     * literals); each query probes its `nprobe` nearest cells and ranks
     * candidates exactly. Candidate volume ≈ |corpus|·nprobe/k — the
     * classic recall/cost dial. The only join is the candidate equi-join
-    * on the cell id, with the tiny probe side broadcast.
-    */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryIdCol: String,
-      k: Int,
-      nCells: Int = 16,
-      nprobe: Int = 4,
-      quantScale: Int = 1000,
-      trainFraction: Double = 1.0): DataFrame =
-    ivfTopKWith(
-      ivfCentroidsLocal(corpus, idCol, vecCol, nCells,
-        quantScale = quantScale, trainFraction = trainFraction),
-      corpus, queries, idCol, vecCol, queryIdCol, k, nprobe, quantScale)
-
-  /** Serving path of [[ivfTopK]] against a pre-trained centroid table —
-    * the IVF analog of [[pqTopKWith]]: at corpus scale the coarse
-    * quantizer is trained once per corpus snapshot (the build-once index
-    * artifact) and reused by every query batch, so the trained
-    * `(cid, cv)` seq is a first-class value like [[PqModel]].
+    * on the cell id, with the tiny probe side broadcast. At corpus scale
+    * the coarse quantizer is trained once per corpus snapshot (the
+    * build-once index artifact) and reused by every query batch, so the
+    * trained `(cid, cv)` seq is a first-class value like [[PqModel]].
     */
   def ivfTopKWith(
       cents: Seq[(Int, IndexedSeq[Long])],
@@ -844,28 +778,10 @@ object Similarity {
     * path: corpus assignment and query probing score against the (cid, cv)
     * RELATION (a BroadcastHashJoin) instead of per-centroid literals,
     * which cap out against JVM codegen method limits past a few hundred
-    * cells. Candidate shape is identical to [[ivfTopK]]: the only
+    * cells. Candidate shape is identical to [[ivfTopKWith]]: the only
     * corpus-side join is the equi-join on the probed cell id with the tiny
     * probe side broadcast, so candidate volume stays |corpus|·nprobe/k.
-    */
-  def ivfTopKJoined(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryIdCol: String,
-      k: Int,
-      nCells: Int = 64,
-      nprobe: Int = 8,
-      quantScale: Int = 1000,
-      trainFraction: Double = 1.0): DataFrame =
-    ivfTopKJoinedWith(
-      ivfCentroidsLocal(corpus, idCol, vecCol, nCells,
-        quantScale = quantScale, trainFraction = trainFraction),
-      corpus, queries, idCol, vecCol, queryIdCol, k, nprobe, quantScale)
-
-  /** Serving path of [[ivfTopKJoined]] against a pre-trained centroid
-    * table — see [[ivfTopKWith]] for the build-once contract.
+    * Takes the same pre-trained centroid table as [[ivfTopKWith]].
     */
   def ivfTopKJoinedWith(
       cents: Seq[(Int, IndexedSeq[Long])],
@@ -923,32 +839,6 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("cosine"))
   }
 
-  /** Deterministic random hyperplanes (driver-side, seeded). */
-  def hyperplanes(dim: Int, nPlanes: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(nPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Sign-bit LSH bucket key: bit i set iff dot(vec, plane_i) > 0. */
-  def lshBucket(vec: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val planeLit = array(p.map(lit): _*)
-      when(dot(vec, planeLit) > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** LSH-bucketed approximate top-k with multi-probe: corpus vectors land
-    * in one sign-bit bucket; each query probes its own bucket plus every
-    * bucket at Hamming distance 1 (flip one plane's bit) — the standard
-    * multi-probe trick (Lv et al., VLDB'07) that recovers most of the
-    * recall lost to near-boundary vectors without growing the corpus-side
-    * index. Candidates are then ranked exactly.
-    *
-    * Scale shape: the corpus side is bucketed once (equi-join key), the
-    * probe side is |queries| × (nPlanes+1) rows — still tiny and
-    * broadcastable. Shuffle volume stays per-bucket, never corpus×queries.
-    * Recall/cost is tuned via nPlanes (fewer planes = bigger buckets =
-    * higher recall, more compute).
-    */
   /** Rademacher sign-LSH bucket key over the QUANTIZED vector: bit i set
     * iff Σ_j sign(i+1, j)·q_j > 0 with the [[signMatrix]] md5-parity ±1
     * rows — an EXACT integer comparison, so the bucketing replays in any
@@ -962,6 +852,20 @@ object Similarity {
         lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
+  /** LSH-bucketed approximate top-k with multi-probe: corpus vectors land
+    * in one sign-bit bucket ([[lshBucketSigns]] over the [[signMatrix]]
+    * rows); each query probes its own bucket plus every bucket at Hamming
+    * distance 1 (flip one plane's bit) — the standard multi-probe trick
+    * (Lv et al., VLDB'07) that recovers most of the recall lost to
+    * near-boundary vectors without growing the corpus-side index.
+    * Candidates are then ranked exactly.
+    *
+    * Scale shape: the corpus side is bucketed once (equi-join key), the
+    * probe side is |queries| × (nPlanes+1) rows — still tiny and
+    * broadcastable. Shuffle volume stays per-bucket, never corpus×queries.
+    * Recall/cost is tuned via nPlanes (fewer planes = bigger buckets =
+    * higher recall, more compute).
+    */
   def lshTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -970,31 +874,17 @@ object Similarity {
       queryIdCol: String,
       k: Int,
       nPlanes: Int = 8,
-      seed: Long = 42L,
-      dim: Int = 0,
-      replayable: Boolean = false): DataFrame = {
-    // dim must match the embedding width: a mismatched hyperplane length
-    // makes zip_with pad with nulls, every plane dot goes null, and all
-    // vectors silently collapse into bucket 0 (full brute force). Derive
-    // it from the data unless the caller pins it.
+      dim: Int = 0): DataFrame = {
+    // dim must match the embedding width: dot_i64 ignores a vector's
+    // overhang past a shorter sign row, so a wrong width silently buckets
+    // on a subspace. Derive it from the data unless the caller pins it.
     val planeDim =
       if (dim > 0) dim
       else corpus.select(size(col(vecCol))).head(1).headOption.map(_.getInt(0)).getOrElse(1)
-    // replayable mode swaps the seeded-Gaussian hyperplanes for the
-    // md5-parity Rademacher rows and buckets on exact integer sign
-    // tests over the quantized vector — same recall story (sign-LSH
-    // needs only a symmetric hyperplane distribution), but every bucket
-    // decision is oracle-replayable; `seed` is ignored in this mode.
-    val planes =
-      if (replayable) Nil else hyperplanes(planeDim, nPlanes, seed)
-    val signs =
-      if (replayable) signMatrix(nPlanes, planeDim) else Nil
-    def bucketOf(rawVec: Column, qvec: Column): Column =
-      if (replayable) lshBucketSigns(qvec, signs)
-      else lshBucket(rawVec, planes)
+    val signs = signMatrix(nPlanes, planeDim)
     val c = corpus.select(col(idCol).as("neighbor_id"),
       quantize(col(vecCol)).as("cv"),
-      bucketOf(col(vecCol), quantize(col(vecCol))).as("bucket"))
+      lshBucketSigns(quantize(col(vecCol)), signs).as("bucket"))
       .withColumn("cn", quantizedNorm(col("cv")))
     // Compute the bucket once, derive the hamming-1 probes by XOR on the
     // materialized column — re-expanding the plane dot products per probe
@@ -1004,7 +894,7 @@ object Similarity {
         col("qb0").bitwiseXOR(lit(1L << i)))): _*)
     val q = queries.select(col(queryIdCol).as("query_id"),
         quantize(col(vecCol)).as("qv"),
-        bucketOf(col(vecCol), quantize(col(vecCol))).as("qb0"))
+        lshBucketSigns(quantize(col(vecCol)), signs).as("qb0"))
       .withColumn("qn", quantizedNorm(col("qv")))
       .select(col("query_id"), col("qv"), col("qn"), explode(probes).as("qbucket"))
     val w = Window.partitionBy(col("query_id"))
@@ -1108,51 +998,10 @@ object Similarity {
     books
   }
 
-  /** Product-quantization ADC top-k with exact re-ranking (Jégou et al.,
-    * "Product Quantization for Nearest Neighbor Search", PAMI 2011) — the
-    * third approximate scale path next to LSH buckets and IVF cells.
-    * Corpus vectors compress to `m` sub-codes (one codebook of `ks`
-    * centroids per subspace, trained with the same sampled Lloyd as IVF);
-    * queries score the compressed codes through per-subspace lookup
-    * tables (asymmetric distance computation); the top `refine × k` ADC
-    * candidates are re-ranked by EXACT quantized cosine. Approximation
-    * therefore only affects which candidates are considered (recall) —
-    * the returned ordering and scores are true, like the rest of the
-    * family.
-    *
-    * Scale story — compression is the point: at dim=1024 a raw vector is
-    * ~4 KB while its code is `m` small ints (≈ m bytes at ks ≤ 256), so
-    * the ADC scan over 10¹⁰ vectors reads orders of magnitude fewer
-    * bytes than brute force, and the codes frame fits where raw vectors
-    * don't. Codebook training is per-subspace sampled Lloyd (driver
-    * residency m × ks × dim/m longs — the documented centroid contract);
-    * encoding is a pure projection of literal argmins; scoring broadcasts
-    * the tiny query+LUT relation; the refine step joins the true vectors
-    * of only |queries| × refine × k candidates (broadcast). The corpus is
-    * never shuffled.
-    */
-  def pqTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryIdCol: String,
-      k: Int,
-      m: Int = 8,
-      ks: Int = 16,
-      refine: Int = 4,
-      quantScale: Int = 1000,
-      trainFraction: Double = 1.0,
-      dim: Int = 0): DataFrame =
-    pqTopKWith(
-      pqTrain(corpus, idCol, vecCol, m = m, ks = ks, quantScale = quantScale,
-        trainFraction = trainFraction, dim = dim),
-      corpus, queries, idCol, vecCol, queryIdCol, k, refine)
-
   /** Trained PQ codebooks — the build-once index artifact. At corpus
     * scale codebooks are trained once per corpus snapshot and reused by
-    * every query batch (training is the dominant cost of a single
-    * [[pqTopK]] call; encode/score/re-rank are cheap per batch), so the
+    * every query batch (training is the dominant cost; encode/score/
+    * re-rank are cheap per batch), so the
     * model is a first-class value: train with [[pqTrain]], serve with
     * [[pqTopKWith]].
     */
@@ -1181,10 +1030,33 @@ object Similarity {
         quantScale = quantScale, trainFraction = trainFraction))
   }
 
-  /** ADC top-k + exact re-rank against a pre-trained [[PqModel]] — the
-    * serving path: encode the corpus with the model's codebooks, score
+  /** Product-quantization ADC top-k with exact re-ranking (Jégou et al.,
+    * "Product Quantization for Nearest Neighbor Search", PAMI 2011) — the
+    * third approximate scale path next to LSH buckets and IVF cells.
+    * Corpus vectors compress to `m` sub-codes (one codebook of `ks`
+    * centroids per subspace, trained with the same sampled Lloyd as IVF);
+    * queries score the compressed codes through per-subspace lookup
+    * tables (asymmetric distance computation); the top `refine × k` ADC
+    * candidates are re-ranked by EXACT quantized cosine. Approximation
+    * therefore only affects which candidates are considered (recall) —
+    * the returned ordering and scores are true, like the rest of the
+    * family.
+    *
+    * Scale story — compression is the point: at dim=1024 a raw vector is
+    * ~4 KB while its code is `m` small ints (≈ m bytes at ks ≤ 256), so
+    * the ADC scan over 10¹⁰ vectors reads orders of magnitude fewer
+    * bytes than brute force, and the codes frame fits where raw vectors
+    * don't. Codebook training is per-subspace sampled Lloyd (driver
+    * residency m × ks × dim/m longs — the documented centroid contract);
+    * encoding is a pure projection of literal argmins; scoring broadcasts
+    * the tiny query+LUT relation; the refine step joins the true vectors
+    * of only |queries| × refine × k candidates (broadcast). The corpus is
+    * never shuffled.
+    *
+    * This is the serving path against a pre-trained [[PqModel]]
+    * ([[pqTrain]]): encode the corpus with the model's codebooks, score
     * through query-side LUTs, re-rank the `refine × k` survivors by true
-    * quantized cosine. Same output contract as [[pqTopK]].
+    * quantized cosine.
     */
   def pqTopKWith(
       model: PqModel,

@@ -2,52 +2,24 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Staging reads/writes — the engine's source/sink surface.
+/** Staging layouts — the engine's sink-side passes beyond a plain write.
   *
   * The reference's sources are driver-side fetches of single files (XLSX /
   * PDF→DOCX, SURVEY §2.1) and its sink is an XLSX file + FTP upload
   * (§2.9); neither is a distributed format. The engine's canonical
   * interchange is Parquet (what the driver's Verify harness compares), with
-  * CSV/JSON for interop — all through `spark.read`/`write` so scans keep
-  * pushdown, pruning, and split planning.
+  * CSV/JSON for interop — all through `spark.read`/`write` directly, so
+  * scans keep pushdown, pruning, and split planning.
   *
-  * Scale notes encoded here:
-  *  - `writePartitioned` lays data out hive-style (`col=value/`) so
-  *    partition pruning turns predicate-on-partition-column queries into
-  *    directory listings, not scans — at 100 TB this is the first-order
-  *    term in scan cost;
+  * Scale notes:
+  *  - a hive-style partitioned write (`partitionBy`, `col=value/`) turns
+  *    predicate-on-partition-column queries into directory listings, not
+  *    scans — at 100 TB this is the first-order term in scan cost;
   *  - writers coalesce nothing: parallelism of the upstream plan is
   *    preserved; file sizing is the caller's `maxRecordsPerFile`/AQE
   *    concern, not a collect-and-write.
   */
 object Stage {
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  def readCsv(spark: SparkSession, path: String, header: Boolean = true): DataFrame =
-    spark.read.option("header", header.toString).option("inferSchema", "false").csv(path)
-
-  def readJsonl(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def writeJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
 
   /** ZORDER-style layout pass: min-max scale two numeric columns to 21-bit
     * coordinates, key rows by their Morton interleave (`z_order2` native

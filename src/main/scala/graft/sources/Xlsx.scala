@@ -289,7 +289,7 @@ object Xlsx {
     * DRIVER-SIDE by design, like the reference's single delivered file:
     * the collect is capped at [[MaxWriteRows]] (the XLSX format limit).
     * Distributed, scan-efficient persistence stays Parquet
-    * ([[Stage.writeParquet]]); this is the interchange format humans and
+    * (`df.write.parquet`); this is the interchange format humans and
     * the FTP delivery step consume.
     */
   def writeBytes(df: DataFrame, sheetName: String = "Sheet1",

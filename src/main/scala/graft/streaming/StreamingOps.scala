@@ -169,37 +169,6 @@ object StreamingOps {
   final case class SessionOut(user_id: Long, session_start: Timestamp,
       n_events: Long, session_value: Double)
 
-  final case class CounterOut(user_id: Long, n_events: Long, closed: Boolean)
-
-  /** Streaming per-key running count with idle-key eviction via
-    * mapGroupsWithState + PROCESSING-time timeout — the state-hygiene
-    * pattern for keys that simply stop arriving: an event-time watermark
-    * can never evict them if the whole stream goes quiet, but wall-clock
-    * timeouts fire regardless. Emits the running tally on every update and
-    * one final `closed = true` record when the key is evicted; state size
-    * is |active keys|, independent of stream length.
-    */
-  def streamingIdleEvictCounter(
-      events: Dataset[SessionInput],
-      idleTimeout: String = "30 seconds"): Dataset[CounterOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.ProcessingTimeTimeout)(
-        (userId: Long, rows: Iterator[SessionInput], state: GroupState[Long]) => {
-          if (state.hasTimedOut) {
-            val n = state.getOption.getOrElse(0L)
-            state.remove()
-            CounterOut(userId, n, closed = true)
-          } else {
-            val n = state.getOption.getOrElse(0L) + rows.size
-            state.update(n)
-            state.setTimeoutDuration(idleTimeout)
-            CounterOut(userId, n, closed = false)
-          }
-        })
-  }
-
   /** Streaming gap-based sessionization via flatMapGroupsWithState — the
     * stateful analog of [[graft.ops.MergeOps.sessionize]]: per-user state
     * holds the open session; an event past the gap (or state timeout at

@@ -136,10 +136,6 @@ object TextAnalysis {
   def fingerprintMd5(c: Column): Column =
     md5(graft.dedup.Dedup.normalizeText(c))
 
-  /** Order-sensitive 64-bit rolling-hash fingerprint (native expression). */
-  def fingerprintRolling(c: Column): Column =
-    GraftFunctions.rollingHash64(graft.dedup.Dedup.normalizeText(c))
-
   /** TF-IDF top-k terms per document: tf = term occurrences in the doc,
     * df = documents containing the term, idf = ln((N+1)/(df+1)), ranked
     * by the ROUNDED score (4 decimals) then term — rounding first makes

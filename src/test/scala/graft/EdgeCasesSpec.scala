@@ -100,12 +100,15 @@ class EdgeCasesSpec extends SparkSpec {
     // must fall back to the first k vectors instead of failing analysis.
     val odd = (0 until 10).map(i => (2L * i + 1, Seq(i.toFloat, 1.0f)))
       .toDF("vec_id", "embedding")
-    val out = Similarity.ivfTopK(odd, odd.limit(2), "vec_id", "embedding", "vec_id",
-      k = 3, nCells = 5, nprobe = 5)
+    val cents = Similarity.ivfCentroidsLocal(odd, "vec_id", "embedding", k = 5)
+    val out = Similarity.ivfTopKWith(cents, odd, odd.limit(2), "vec_id", "embedding",
+      "vec_id", k = 3, nprobe = 5)
     assert(out.count() > 0)
     val empty = odd.filter($"vec_id" < 0)
-    assert(Similarity.ivfTopK(empty, odd.limit(1), "vec_id", "embedding", "vec_id",
-      k = 3, nCells = 5, nprobe = 2).count() == 0)
+    val none = Similarity.ivfCentroidsLocal(empty, "vec_id", "embedding", k = 5)
+    assert(none.isEmpty)
+    assert(Similarity.ivfTopKWith(none, empty, odd.limit(1), "vec_id", "embedding",
+      "vec_id", k = 3, nprobe = 2).count() == 0)
   }
 
   test("corpus-hygiene ops tolerate null text and empty benchmark sets") {

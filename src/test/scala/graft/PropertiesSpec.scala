@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.TextOps
-import graft.expr.{RollingHash64, SimHash64}
+import graft.expr.SimHash64
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
@@ -45,20 +45,6 @@ class PropertiesSpec extends SparkSpec {
       .select(TextOps.cleanCell(col("x")).as("once"))
       .select(col("once"), TextOps.cleanCell(col("once")).as("twice"))
     df.collect().foreach(r => assert(r.getString(0) == r.getString(1)))
-  }
-
-  test("property: rolling hash distributes over concatenation (Karp-Rabin identity)") {
-    // h(a ++ b) = h(a) * B^len(b) + h(b)  (mod 2^64)
-    val pairs = samplesOf(Gen.zip(Gen.asciiStr, Gen.asciiStr))
-    pairs.foreach { case (a, b) =>
-      val ha = RollingHash64.compute(UTF8String.fromString(a))
-      val hb = RollingHash64.compute(UTF8String.fromString(b))
-      val hab = RollingHash64.compute(UTF8String.fromString(a + b))
-      val bLen = UTF8String.fromString(b).getBytes.length
-      var pow = 1L
-      (0 until bLen).foreach(_ => pow *= RollingHash64.Base)
-      assert(hab == ha * pow + hb)
-    }
   }
 
   test("property: simhash of a permuted token bag is identical (bag semantics)") {

@@ -44,30 +44,23 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("minhashLshPairs recalls planted duplicates (both hash families)") {
-    for (replayable <- Seq(false, true)) {
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-          threshold = 0.6, replayable = replayable)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(pairs.contains((0L, 1L)), s"replayable=$replayable")
-      assert(pairs.contains((0L, 2L)), s"replayable=$replayable")
-      assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L),
-        s"replayable=$replayable")
-    }
+  test("minhashLshPairs recalls planted duplicates") {
+    val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text", threshold = 0.6)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(pairs.contains((0L, 1L)))
+    assert(pairs.contains((0L, 2L)))
+    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }
 
-  test("replayable and production families agree on planted-dup recall") {
-    // Differential pin: the production xxhash64 family is exercised only
-    // by specs (the registered query runs replayable=true), so an edit
-    // to either family must not silently diverge. Both verify candidates
-    // with EXACT Jaccard, so the output sets differ only through banding
-    // misses — and at the planted pairs' Jaccard (~0.9, one-word edits
-    // of 60-word docs) the per-family miss probability is ~2e-8 with 16
-    // bands of 4. Twelve planted pairs, two thresholds, exact set
-    // equality between families.
+  test("minhashLshPairs recalls all twelve planted pairs at both thresholds") {
+    // Recall pin for the affine family. Candidates are verified with
+    // EXACT Jaccard, so the output differs from the true pair set only
+    // through banding misses — and at the planted pairs' Jaccard (~0.9,
+    // one-word edits of 60-word docs) the miss probability is ~2e-8 with
+    // 16 bands of 4.
     // Per-doc unique vocabulary: cross-doc Jaccard is exactly 0, so the
     // only similar pairs are the planted ones — no borderline-Jaccard
-    // cross pairs where banding recall may legitimately differ.
+    // cross pairs where banding recall may legitimately vary.
     // 60 words → a one-word edit flips 3 of ~58 shingles (j ≈ 0.90);
     // per-band collision 0.9⁴ ≈ 0.66, miss ≈ (1−0.66)¹⁶ ≈ 2e-8.
     def doc(i: Int): String =
@@ -79,18 +72,12 @@ class DedupSpec extends SparkSpec {
     } ++ (0 until 6).map(i => (100L + i,
       s"unique standalone document number $i about topic${i} with nothing shared"))
     val df = rows.toDF("doc_id", "text")
+    val planted = (0 until 12).map(i => (i * 2L, i * 2L + 1L)).toSet
     for (threshold <- Seq(0.6, 0.8)) {
-      def pairsOf(replayable: Boolean) =
-        Dedup.minhashLshPairs(df, "doc_id", "text", threshold = threshold,
-            replayable = replayable)
-          .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val prod = pairsOf(replayable = false)
-      val replay = pairsOf(replayable = true)
-      assert(prod == replay,
-        s"families diverge at threshold=$threshold: prod-only=${prod -- replay}, replay-only=${replay -- prod}")
-      val planted = (0 until 12).map(i => (i * 2L, i * 2L + 1L)).toSet
-      assert(planted.subsetOf(prod),
-        s"missed planted pairs at threshold=$threshold: ${planted -- prod}")
+      val got = Dedup.minhashLshPairs(df, "doc_id", "text", threshold = threshold)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      assert(got == planted,
+        s"threshold=$threshold: missed ${planted -- got}, extra ${got -- planted}")
     }
   }
 
@@ -141,10 +128,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature: identical sets → identical signatures") {
-    val df = Seq((0L, base), (1L, base)).toDF("doc_id", "text")
-      .select(col("doc_id"),
-        Dedup.minhashSignature(Dedup.shingles(col("text"), 3), 16).as("sig"))
-    val sigs = df.select("sig").as[Seq[Long]].collect()
+    val sets = Seq((0L, base), (1L, base)).toDF("doc_id", "text")
+      .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
+    val sigs = Dedup.minhashSignatures(sets, "doc_id", "sh", 16)
+      .select("sig").as[Seq[Long]].collect()
+    assert(sigs.length == 2 && sigs(0).length == 16)
     assert(sigs(0) == sigs(1))
   }
 

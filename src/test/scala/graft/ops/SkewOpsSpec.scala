@@ -3,7 +3,7 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Salted join/agg must return exactly the unsalted results — only the
+/** Salted joins must return exactly the unsalted results — only the
   * partitioning differs.
   */
 class SkewOpsSpec extends SparkSpec {
@@ -32,15 +32,6 @@ class SkewOpsSpec extends SparkSpec {
     assert(r.length == 2)
     assert(r(0).getAs[String]("label") == "m")
     assert(r(1).isNullAt(r(1).fieldIndex("label")))
-  }
-
-  test("saltedCountSum equals direct aggregation") {
-    val df = (1 to 500).map(i => (i % 3, i.toDouble)).toDF("k", "v")
-    val direct = df.groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("sum"))
-      .orderBy("k").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val salted = SkewOps.saltedCountSum(df, "k", "v", saltFactor = 4)
-      .orderBy("k").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    assert(direct.toSeq == salted.toSeq)
   }
 
   test("heavyHitters ranks by count then key, with exact shares") {

@@ -54,29 +54,6 @@ class SkewVoteFuzzSpec extends SparkSpec {
     }
   }
 
-  test("fuzz: saltedCountSum equals the direct aggregation with nulls") {
-    for (trial <- 0 until 4) {
-      val rnd = new Random(9200 + trial)
-      val rows = (0 until 20 + rnd.nextInt(150)).map { _ =>
-        val v: java.lang.Long =
-          if (rnd.nextInt(8) == 0) null else (rnd.nextInt(2001) - 1000).toLong
-        (s"k${if (rnd.nextInt(3) > 0) 0 else rnd.nextInt(6)}", v)
-      }
-      val df = rnd.shuffle(rows).toDF("k", "v")
-        .repartition(1 + rnd.nextInt(5))
-      val got = SkewOps.saltedCountSum(df, "k", "v", 1 + rnd.nextInt(6))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1),
-          if (r.isNullAt(2)) None else Some(r.getLong(2))))
-        .toSet
-      val want = rows.groupBy(_._1).map { case (k, rs) =>
-        val vs = rs.flatMap(r => Option(r._2)).map(_.longValue)
-        (k, rs.size.toLong, if (vs.isEmpty) None else Some(vs.sum))
-      }.toSet
-      assert(got == want, s"trial $trial")
-    }
-  }
-
   test("fuzz: heavyHitters matches a local rank/share fold") {
     for (trial <- 0 until 4) {
       val rnd = new Random(9300 + trial)

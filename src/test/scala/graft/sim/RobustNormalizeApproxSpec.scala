@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Pins the approx↔exact agreement of [[Similarity.robustNormalizeApprox]]
+/** Pins the approx↔exact agreement of [[Similarity.robustNormalizeApproxRows]]
   * — the sketched (Greenwald–Khanna) twin of the exact per-dim median/MAD
   * normalization. `percentile_approx` returns an OBSERVED value where the
   * exact percentile interpolates, so the contract is closeness in quant
@@ -20,8 +20,10 @@ class RobustNormalizeApproxSpec extends SparkSpec {
       (1L, Seq(1.0f, 5.0f)),
       (2L, Seq(2.0f, 5.0f)),
       (3L, Seq(3.0f, 5.0f))).toDF("vec_id", "embedding")
-    val out = Similarity.robustNormalizeApprox(df, "vec_id", "embedding")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val out = Similarity.robustNormalizeApproxRows(df, "vec_id", "embedding")
+      .collect().toSeq.groupBy(_.getLong(0)).map { case (id, rs) =>
+        id -> rs.sortBy(_.getLong(1)).map(_.getLong(2))
+      }
     assert(out(1L) == Seq(-1000000L, 0L))
     assert(out(2L) == Seq(0L, 0L))
     assert(out(3L) == Seq(1000000L, 0L))
@@ -52,9 +54,10 @@ class RobustNormalizeApproxSpec extends SparkSpec {
 
   test("output contract matches the exact twin: same schema, one row per vector") {
     val emb = graft.Tables.load(spark, sf001, "embeddings")
-    val ex = Similarity.robustNormalize(emb, "vec_id", "embedding")
-    val ap = Similarity.robustNormalizeApprox(emb, "vec_id", "embedding")
+    val ex = Similarity.robustNormalizeRows(emb, "vec_id", "embedding")
+    val ap = Similarity.robustNormalizeApproxRows(emb, "vec_id", "embedding")
     assert(ap.schema == ex.schema)
-    assert(ap.count() == emb.count())
+    assert(ap.count() == ex.count())
+    assert(ap.select("id").distinct().count() == emb.count())
   }
 }

@@ -70,19 +70,16 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("lshTopK achieves reasonable recall@5 vs brute force (both families)") {
+  test("lshTopK achieves reasonable recall@5 vs brute force") {
     val emb = graft.Tables.load(spark, sf001, "embeddings")
     val queries = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    for (replayable <- Seq(false, true)) {
-      val approx = Similarity.lshTopK(emb, queries, "vec_id", "embedding", "vec_id",
-          k = 5, nPlanes = 4, replayable = replayable)
-        .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-      val recall = (exact intersect approx).size.toDouble / exact.size
-      assert(recall >= 0.4,
-        s"LSH recall@5 too low (replayable=$replayable): $recall")
-    }
+    val approx = Similarity.lshTopK(emb, queries, "vec_id", "embedding", "vec_id",
+        k = 5, nPlanes = 4)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
+    val recall = (exact intersect approx).size.toDouble / exact.size
+    assert(recall >= 0.4, s"LSH recall@5 too low: $recall")
   }
 
   test("dot_i64 native expression agrees with the HOF formulation") {
@@ -153,8 +150,9 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfTopKJoined(emb, queries, "vec_id", "embedding", "vec_id",
-        k = 5, nCells = 64, nprobe = 16)
+    val cents = Similarity.ivfCentroidsLocal(emb, "vec_id", "embedding", k = 64)
+    val approx = Similarity.ivfTopKJoinedWith(cents, emb, queries, "vec_id",
+        "embedding", "vec_id", k = 5, nprobe = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.4, s"joined-IVF recall@5 too low: $recall")
@@ -174,8 +172,10 @@ class SimilaritySpec extends SparkSpec {
     val pairs = Similarity.cosinePairs(df, "vec_id", "embedding", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
-    val topk = Similarity.ivfTopK(df, df.filter(col("vec_id") === 1), "vec_id",
-      "embedding", "vec_id", k = 2, nCells = 2, nprobe = 2)
+    val topk = Similarity.ivfTopKWith(
+      Similarity.ivfCentroidsLocal(df, "vec_id", "embedding", k = 2),
+      df, df.filter(col("vec_id") === 1), "vec_id", "embedding", "vec_id",
+      k = 2, nprobe = 2)
     assert(topk.count() > 0) // degenerate pivot must not crash probing
   }
 
@@ -210,8 +210,9 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", "vec_id",
-        k = 5, nCells = 16, nprobe = 4)
+    val cents = Similarity.ivfCentroidsLocal(emb, "vec_id", "embedding", k = 16)
+    val approx = Similarity.ivfTopKWith(cents, emb, queries, "vec_id", "embedding",
+        "vec_id", k = 5, nprobe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.4, s"IVF recall@5 too low: $recall")
@@ -222,8 +223,10 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val approx = Similarity.ivfTopK(emb, queries, "vec_id", "embedding", "vec_id",
-        k = 5, nCells = 8, nprobe = 4, trainFraction = 0.5)
+    val cents = Similarity.ivfCentroidsLocal(emb, "vec_id", "embedding", k = 8,
+      trainFraction = 0.5)
+    val approx = Similarity.ivfTopKWith(cents, emb, queries, "vec_id", "embedding",
+        "vec_id", k = 5, nprobe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (exact intersect approx).size.toDouble / exact.size
     assert(recall >= 0.4, s"sampled-train IVF recall@5 too low: $recall")
@@ -247,21 +250,20 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf centroids are deterministic and cover all cells probed") {
     val emb = graft.Tables.load(spark, sf001, "embeddings")
-    val c1 = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 8)
-      .orderBy("cid").collect().map(_.toSeq)
-    val c2 = Similarity.ivfCentroids(emb, "vec_id", "embedding", k = 8)
-      .orderBy("cid").collect().map(_.toSeq)
-    assert(c1.toSeq == c2.toSeq)
+    val c1 = Similarity.ivfCentroidsLocal(emb, "vec_id", "embedding", k = 8)
+    val c2 = Similarity.ivfCentroidsLocal(emb, "vec_id", "embedding", k = 8)
+    assert(c1 == c2)
     assert(c1.length == 8)
   }
 
   test("lsh buckets are deterministic across invocations") {
-    val planes = Similarity.hyperplanes(4, 8)
-    assert(planes == Similarity.hyperplanes(4, 8))
+    val signs = Similarity.signMatrix(8, 4)
+    assert(signs == Similarity.signMatrix(8, 4))
     val df = Seq(Seq(0.1f, -0.2f, 0.3f, -0.4f)).toDF("v")
-    val b1 = df.select(Similarity.lshBucket(col("v"), planes).as("b")).as[Long].collect()(0)
-    val b2 = df.select(Similarity.lshBucket(col("v"), planes).as("b")).as[Long].collect()(0)
-    assert(b1 == b2)
+      .select(Similarity.quantize(col("v")).as("q"))
+    def bucket(): Long =
+      df.select(Similarity.lshBucketSigns(col("q"), signs).as("b")).as[Long].collect()(0)
+    assert(bucket() == bucket())
   }
 
   test("pqTopK achieves reasonable recall@5 vs brute force; re-ranked scores are exact") {
@@ -270,8 +272,9 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", "vec_id", k = 5)
       .select("query_id", "neighbor_id", "cosine")
       .as[(Long, Long, Double)].collect()
-    val approx = Similarity.pqTopK(emb, queries, "vec_id", "embedding", "vec_id",
-        k = 5, m = 8, ks = 16, refine = 8)
+    val model = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ks = 16)
+    val approx = Similarity.pqTopKWith(model, emb, queries, "vec_id", "embedding",
+        "vec_id", k = 5, refine = 8)
       .select("query_id", "neighbor_id", "cosine")
       .as[(Long, Long, Double)].collect()
     val exactSet = exact.map(t => (t._1, t._2)).toSet
@@ -291,16 +294,18 @@ class SimilaritySpec extends SparkSpec {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Seq((0L, Seq(0f))).toDF("vec_id", "embedding").schema)
-    assert(Similarity.pqTopK(empty, empty, "vec_id", "embedding", "vec_id", k = 3)
-      .count() == 0)
+    val model = Similarity.pqTrain(empty, "vec_id", "embedding")
+    assert(model.isEmpty)
+    assert(Similarity.pqTopKWith(model, empty, empty, "vec_id", "embedding",
+      "vec_id", k = 3).count() == 0)
   }
 
   test("pqTopK validates subspace and codebook parameters") {
     val emb = graft.Tables.load(spark, sf001, "embeddings")
     intercept[IllegalArgumentException](
-      Similarity.pqTopK(emb, emb, "vec_id", "embedding", "vec_id", k = 3, m = 7))
+      Similarity.pqTrain(emb, "vec_id", "embedding", m = 7))
     intercept[IllegalArgumentException](
-      Similarity.pqTopK(emb, emb, "vec_id", "embedding", "vec_id", k = 3, ks = 300))
+      Similarity.pqTrain(emb, "vec_id", "embedding", ks = 300))
   }
 
   test("pqTrain model is reusable: pqTopKWith equals pqTopK, serves disjoint query batches") {
@@ -308,8 +313,10 @@ class SimilaritySpec extends SparkSpec {
     val model = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ks = 16)
     assert(!model.isEmpty && model.dim == model.m * model.sub)
     val q1 = emb.filter(col("vec_id") < 10)
-    val oneShot = Similarity.pqTopK(emb, q1, "vec_id", "embedding", "vec_id",
-        k = 5, m = 8, ks = 16, refine = 8)
+    // train-and-serve in one step (a fresh model) vs the kept model
+    val oneShot = Similarity.pqTopKWith(
+        Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, ks = 16),
+        emb, q1, "vec_id", "embedding", "vec_id", k = 5, refine = 8)
       .select("query_id", "neighbor_id", "cosine")
       .as[(Long, Long, Double)].collect().toSet
     val served = Similarity.pqTopKWith(model, emb, q1, "vec_id", "embedding", "vec_id",
@@ -351,14 +358,19 @@ class SimilaritySpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  /** `(id, dim, nm)` rows → id → nm in dimension order. */
+  private def normByVector(rows: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+    rows.collect().toSeq.groupBy(_.getLong(0)).map { case (id, rs) =>
+      id -> rs.sortBy(_.getLong(1)).map(_.getLong(2))
+    }
+
   test("robustNormalize: exact median/MAD micro-units; zero-MAD dim maps to 0") {
     // dim0 quantizes to {1000,2000,3000}: med 2000, MAD 1000; dim1 constant
     val df = Seq(
       (1L, Seq(1.0f, 5.0f)),
       (2L, Seq(2.0f, 5.0f)),
       (3L, Seq(3.0f, 5.0f))).toDF("vec_id", "embedding")
-    val out = Similarity.robustNormalize(df, "vec_id", "embedding")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val out = normByVector(Similarity.robustNormalizeRows(df, "vec_id", "embedding"))
     assert(out(1L) == Seq(-1000000L, 0L))
     assert(out(2L) == Seq(0L, 0L))
     assert(out(3L) == Seq(1000000L, 0L))
@@ -367,8 +379,7 @@ class SimilaritySpec extends SparkSpec {
   test("robustNormalize: even counts interpolate the median exactly") {
     // dim0 {0, 1000}: med 500, |dev| {500,500} → MAD 500 → ±1e6
     val df = Seq((1L, Seq(0.0f)), (2L, Seq(1.0f))).toDF("vec_id", "embedding")
-    val out = Similarity.robustNormalize(df, "vec_id", "embedding")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val out = normByVector(Similarity.robustNormalizeRows(df, "vec_id", "embedding"))
     assert(out(1L) == Seq(-1000000L) && out(2L) == Seq(1000000L))
   }
 

@@ -93,8 +93,7 @@ class VectorFuzzSpec extends SparkSpec {
     }
   }
 
-  test("fuzz: robustNormalizeRows and robustNormalize match a local " +
-    "median/MAD fold") {
+  test("fuzz: robustNormalizeRows matches a local median/MAD fold") {
     def pctile(sorted: Vector[Double], p: Double): Double = {
       val pos = p * (sorted.size - 1)
       val lo = math.floor(pos).toInt
@@ -134,15 +133,6 @@ class VectorFuzzSpec extends SparkSpec {
         }
       }.toSet
       assert(gotRows == wantRows, s"trial $trial rows")
-
-      val gotArr = Similarity.robustNormalize(df, "id", "v")
-        .collect()
-        .map(r => (r.getString(0), r.getSeq[Long](1).toVector))
-        .toSet
-      val wantArr = wantRows.groupBy(_._1).view.mapValues(rs =>
-        rs.toVector.sortBy(_._2).map(_._3)).toMap
-        .map { case (id, v) => (id, v) }.toSet
-      assert(gotArr == wantArr, s"trial $trial array")
     }
   }
 

