@@ -37,7 +37,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
             # back as np.ndarray, on which pd.isna raises (ambiguous
             # truth value) and would kill the whole run instead of
             # failing one query (oracles are scalar-only by contract —
-            # OracleShapeSpec — but the harness must not crash if not)
+            # SurfaceContractSpec — but the harness must not crash if not)
             if isinstance(v, (list, tuple, dict)) or hasattr(v, "__len__") and not isinstance(v, (str, bytes)):
                 return str(v)
             if pd.isna(v):

@@ -86,12 +86,10 @@ object Bench {
     // (ADVICE r13): this exemption covers RDD-level persists ONLY; the
     // sweep still evicts every CacheManager (DataFrame-level)
     // entry each run, so a shared warm DataFrame cache would be recomputed
-    // inside every timed run — don't rely on it being spared. The memoized
-    // DataFrames that exist today (supplyPairs, coPairs) lose their cache
-    // entry at the first sweep and run UNCACHED from then on; operators
-    // that read such a relation more than once per run persist their own
-    // local copy (e.g. GraphOps persists its edge relation), which is the
-    // measured status quo.
+    // inside every timed run — don't rely on it being spared. No query
+    // memoizes a DataFrame across runs: each run builds its relations,
+    // and operators that read one more than once per run persist their
+    // own local copy (e.g. GraphOps persists its edge relation).
     val baselineRdds = spark.sparkContext.getPersistentRDDs.keySet
     calibProbe() // pass START
     val calibMidIdx = selected.size / 2

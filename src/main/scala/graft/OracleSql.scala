@@ -20,7 +20,7 @@ package graft
   */
 object OracleSql {
 
-  /** Mirror of SparkEntry.registryView / registryViewSql. */
+  /** Mirror of SparkEntry.registryView. */
   private val registry =
     """registry AS (
       |  SELECT doc_id,
@@ -3154,7 +3154,7 @@ object OracleSql {
     // lockstep; median/quantile interpolation is exact on quantized
     // longs; division order pinned before the micro floor. Output is
     // one scalar row per (id, dim) — the driver's pandas comparator
-    // cannot sort array cells (r8 lesson; OracleShapeSpec pins it).
+    // cannot sort array cells (r8 lesson; SurfaceContractSpec pins it).
     "q_embed_normalize" ->
       """WITH qz AS (
         |  SELECT vec_id AS id,

@@ -88,7 +88,7 @@ object BpeTokens {
         // split on code points; this keeps encoder, trainer and oracle
         // on the same symbol alphabet.
         val cps = w.codePoints().toArray
-        var syms = new Array[UTF8String](cps.length)
+        val syms = new Array[UTF8String](cps.length)
         var ci = 0
         while (ci < cps.length) {
           syms(ci) = UTF8String.fromString(

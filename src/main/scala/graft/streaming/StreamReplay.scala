@@ -39,7 +39,10 @@ import scala.jdk.CollectionConverters._
   *    batch boundaries.
   *  - Sink lifecycle. The memory sink runs under the caller's fixed name
   *    until `processAllAvailable` returns, then once more after the
-  *    optional later phase, and is stopped in a `finally`.
+  *    optional later phase, and is stopped in a `finally`. The sink
+  *    registers a temp view of that name; it is dropped once the returned
+  *    frame is analyzed, so a replay leaves the session catalog as it
+  *    found it.
   */
 object StreamReplay {
 
@@ -56,7 +59,9 @@ object StreamReplay {
         q.processAllAvailable()
         feed.later.foreach { phase => phase(); q.processAllAvailable() }
       } finally q.stop()
-      s.table(sink)
+      val out = s.table(sink)
+      s.catalog.dropTempView(sink)
+      out
     }
 
   /** The sources of one replay. */

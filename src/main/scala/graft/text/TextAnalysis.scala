@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftFunctions
-
 /** Text-analysis operators for training-data pipelines: language ID,
   * quality scoring, token counting, fingerprinting. All built-ins (one
   * native expression for the rolling hash) → whole-stage codegen, and each

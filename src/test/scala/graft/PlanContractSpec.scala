@@ -682,46 +682,6 @@ class PlanContractSpec extends SparkSpec {
     assert(!p.contains("Window"), s"bleu needs no window:\n${p.take(1500)}")
   }
 
-  test("no nondeterministic expressions beyond the two audited sites (task-retry safety)") {
-    // On a real cluster, a fetch failure retries tasks; an expression
-    // that evaluates differently per attempt (rand, uuid, input_file,
-    // unseeded sampling) silently corrupts results at 100 TB unless the
-    // stage is marked indeterminate. The repo's stance is seeded-hash
-    // determinism everywhere; exactly two nondeterministic primitives
-    // are in audited use, both with engine-level retry protection
-    // (Spark wholly re-runs indeterminate stages, SPARK-23207):
-    //   - monotonically_increasing_id as a TRANSIENT per-row group key
-    //     inside one plan (Similarity.assignCellsJoined);
-    //   - spark_partition_id over a deterministic range partitioning
-    //     (Dedup.sortedNeighborhoodPairs rank build).
-    // This contract walks every registered query's analyzed plan and
-    // fails if any OTHER nondeterministic expression class appears —
-    // new nondeterminism must be an explicit, audited decision.
-    // Streaming replays are skipped: their builders execute the replay
-    // eagerly (their determinism is pinned by the twin/restart specs).
-    val allowed = Set("MonotonicallyIncreasingID", "SparkPartitionID")
-    val offenders = scala.collection.mutable.SortedMap.empty[String, Set[String]]
-    for ((name, fn) <- SparkEntry.queries if !name.startsWith("q_stream_")) {
-      val analyzed = fn(spark, dir).queryExecution.analyzed
-      // collectWithSubqueries descends into SubqueryExpression plans too
-      // (IN/EXISTS/scalar subqueries) — a plain collect over node
-      // expressions would let a rand() inside a subquery pass silently
-      // (ADVICE r14).
-      val nondet = analyzed.collectWithSubqueries { case node =>
-        node.expressions.flatMap(_.collect {
-          // root causes only: wrappers (Alias, arithmetic over a
-          // nondeterministic child) inherit the flag transitively
-          case e if !e.deterministic && e.children.forall(_.deterministic) =>
-            e.getClass.getSimpleName
-        })
-      }.flatten.toSet
-      val extra = nondet -- allowed
-      if (extra.nonEmpty) offenders(name) = extra
-    }
-    assert(offenders.isEmpty,
-      s"unaudited nondeterministic expressions: $offenders")
-  }
-
   test("iterative job-count contracts: hits and pageRank stay inside their job budgets") {
     // r14 attribution: with session AQE re-planning inside the iterate,
     // ONE q_hits run submitted 72 jobs (every query stage its own job)

@@ -3,7 +3,6 @@ package graft
 import graft.ops.TextOps
 import graft.expr.SimHash64
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 
 /** Property tests (SURVEY.md §5.2): normalizer idempotence and fingerprint
@@ -194,8 +193,8 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("property: binned quantile estimates are monotone in q") {
-    val data = samplesOf(Gen.choose(0.0, 99.0), 400).zipWithIndex
-      .map { case (v, i) => ("g", v) }.toDF("grp", "x")
+    val data = samplesOf(Gen.choose(0.0, 99.0), 400)
+      .map(v => ("g", v)).toDF("grp", "x")
     val est = graft.sketch.Sketches.binnedQuantiles(
         data, Seq("grp"), "x", 0.0, 100.0, 32,
         Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99))

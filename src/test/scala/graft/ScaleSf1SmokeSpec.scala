@@ -17,7 +17,6 @@ import graft.sim.Similarity
   * Timings are recorded in SCALE.md per round.
   */
 class ScaleSf1SmokeSpec extends SparkSpec {
-  import spark.implicits._
 
   private def sf01 = "/root/testdata/sf0.1"
 

@@ -2,7 +2,6 @@ package graft.enrich
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

@@ -2,7 +2,6 @@ package graft.graph
 
 import graft.SparkSpec
 
-import org.apache.spark.sql.functions._
 
 import scala.util.Random
 

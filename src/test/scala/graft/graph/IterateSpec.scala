@@ -28,7 +28,7 @@ class IterateSpec extends SparkSpec {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val out = Iterate.fixedPoint(Seq(0L).toDF("v"), 5, 2)(increment)
-    val fresh = sc.getPersistentRDDs.keySet -- before
+    val fresh = sc.getPersistentRDDs.keySet.toSet -- before
     val resultRdds = out.queryExecution.analyzed.collect {
       case r: LogicalRDD => r.rdd.id
     }

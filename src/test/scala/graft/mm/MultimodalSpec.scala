@@ -1,7 +1,6 @@
 package graft.mm
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._

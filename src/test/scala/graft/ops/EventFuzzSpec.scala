@@ -3,7 +3,6 @@ package graft.ops
 import scala.util.Random
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Randomized differentials for the event-history operators against
   * independent local folds: SCD-2 interval builds on tie-heavy restating

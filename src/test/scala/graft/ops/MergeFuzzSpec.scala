@@ -3,7 +3,6 @@ package graft.ops
 import scala.util.Random
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Randomized differential for the FLAGSHIP operator (A1 continuation
   * merge, the `entry` query): random registry-shaped tables — keys drawn

@@ -136,7 +136,7 @@ class RegressionFuzz5Spec extends SparkSpec {
       val rows = (0 until 2 + rnd.nextInt(3)).flatMap { g =>
         val n = 1 + rnd.nextInt(20)
         val shift = rnd.nextInt(10) // a real level shift sometimes
-        rnd.shuffle((1 to n).toVector).zipWithIndex.map { case (t, i) =>
+        rnd.shuffle((1 to n).toVector).zipWithIndex.map { case (t, _) =>
           val base = if (t > n / 2) shift else 0
           (s"g$g", t.toLong, (base + rnd.nextInt(5)).toLong)
         }
@@ -156,7 +156,7 @@ class RegressionFuzz5Spec extends SparkSpec {
         def r2(x: Long): Long =
           2 * (1L + xs.count(_ < x)) + xs.count(_ == x) - 1
         val ordered = rs.sortBy(_._2)
-        val prefixes = ordered.zipWithIndex.map { case ((_, t, x), i) =>
+        val prefixes = ordered.zipWithIndex.map { case ((_, t, _), i) =>
           val tau = (i + 1).toLong
           val s = ordered.take(i + 1).map(r => r2(r._3)).sum
           (t, s - tau * (n + 1))

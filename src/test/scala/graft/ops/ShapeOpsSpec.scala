@@ -21,10 +21,7 @@ class ShapeOpsSpec extends SparkSpec {
   }
 
   test("promoteHeader takes row 0 as names, null→UNKNOWN (belarus.py:112-115)") {
-    val df = ShapeOps.withIndex(
-      Seq((0, "Name", null.asInstanceOf[String]), (1, "a", "1"), (2, "b", "2"))
-        .toDF("ord", "c1", "c2").drop("ord"), col("c1"))
-    // row order by c1: ("Name", null) sorts... use explicit ordered input instead
+    // explicit ordered input: row 0 is the header
     val src = Seq((0L, "Имя", "Код"), (1L, "a", "1"), (2L, "b", "2")).toDF("_ord", "x", "y")
     val indexed = ShapeOps.withIndex(src, col("_ord")).drop("_ord")
     val promoted = ShapeOps.promoteHeader(indexed)

@@ -3,7 +3,6 @@ package graft.sim
 import scala.util.Random
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Randomized differential for the ANN family's exact baseline:
   * [[Similarity.bruteForceTopK]] is what every approximate index's

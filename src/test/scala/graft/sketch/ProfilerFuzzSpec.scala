@@ -3,7 +3,6 @@ package graft.sketch
 import scala.util.Random
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Randomized differentials for the data-profiling operators against
   * independent local folds: k-anonymity/l-diversity class audits (null

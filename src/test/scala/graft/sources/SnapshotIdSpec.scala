@@ -1,15 +1,21 @@
 package graft.sources
 
-import graft.{SparkSpec, Tables}
+import graft.{SparkEntry, SparkSpec, Tables}
 
 /** [[Tables.snapshotId]] keys build-once artifacts (trained ANN
-  * quantizers) by DATA identity. The contract that makes the memoizer
-  * structural instead of conventional: the id is stable across calls on
-  * unchanged files, and any rewrite — same bytes re-written (mtime),
-  * different bytes (length/content) — changes it, so a stale model can
-  * never silently serve after an in-place dataset rewrite.
+  * quantizers, the BPE model) by DATA identity. The contract that makes
+  * the memoizer structural instead of conventional: the id is stable
+  * across calls on unchanged files, and any rewrite — same bytes
+  * re-written (mtime), different bytes (length/content) — changes it, so
+  * a stale model can never silently serve after an in-place dataset
+  * rewrite; the queries built on such tables are checked end to end.
   */
 class SnapshotIdSpec extends SparkSpec {
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete(); ()
+  }
 
   test("snapshotId is stable on unchanged files and moves on any rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft_snap").toFile
@@ -45,13 +51,7 @@ class SnapshotIdSpec extends SparkSpec {
       new java.io.File(probe, "part-00000.parquet").setLastModified(mt)
       val id5 = Tables.snapshotId(spark, dir.getPath, "embeddings")
       assert(id5 != id4, "a moved/renamed file must change the snapshot id")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(dir)
-    }
+    } finally rm(dir)
   }
 
   test("snapshotId reflects the real test dirs distinctly per scale") {
@@ -99,12 +99,38 @@ class SnapshotIdSpec extends SparkSpec {
       val id = Tables.snapshotId(spark, dir.getPath, "docs")
       assert(id == listFilesId(dir.getPath, "docs"))
       assert(id.takeWhile(_ != ':').toInt > 1, s"expected several files: $id")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(dir)
+    } finally rm(dir)
+  }
+
+  test("a table rewritten in place is read anew by the queries built on it") {
+    // q_kcore builds the supply graph from lineitem; q_bpe_encode encodes
+    // documents with the BPE model trained on them. After an in-place
+    // rewrite of both tables, a run in the same session must equal a
+    // fresh build over the new files: no relation or model built from
+    // the old files may serve.
+    val queries = Seq("q_kcore", "q_bpe_encode")
+    def run(dir: String): Seq[Seq[org.apache.spark.sql.Row]] =
+      queries.map(q => SparkEntry.queries(q)(spark, dir).collect().toSeq)
+    val sf01 = new java.io.File(sf001).getParent + "/sf0.01"
+    val dir = java.nio.file.Files.createTempDirectory("graft_rewrite").toFile
+    def copyFrom(sfDir: String): Unit = Seq("lineitem", "documents").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+        new java.io.File(dir, s"$t.parquet").toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+    try {
+      copyFrom(sf001)
+      val before = run(dir.getPath)
+      copyFrom(sf01)
+      val after = run(dir.getPath)
+      val fresh = run(sf01)
+      queries.indices.foreach { i =>
+        val changed = before(i) != fresh(i)
+        assert(changed, s"${queries(i)}: the rewrite must change the result")
+        val readAnew = after(i) == fresh(i)
+        assert(readAnew,
+          s"${queries(i)} served the tables as they were before the in-place rewrite")
+      }
+    } finally rm(dir)
   }
 }

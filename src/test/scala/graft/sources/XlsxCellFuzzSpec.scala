@@ -86,7 +86,7 @@ class XlsxCellFuzzSpec extends SparkSpec {
       val grid = scala.collection.mutable.Map[(Int, Int), String]()
       // the frame is sized by every PRESENT cell, null-valued included
       val present = scala.collection.mutable.Set[(Int, Int)]()
-      var xmlRows = Vector.newBuilder[String]
+      val xmlRows = Vector.newBuilder[String]
       var nextExplicit = 0 // 0-based row index for explicit-r rows
       var xmlPos = 0       // XML position: the index a r-less row gets
       val nRows = 1 + rnd.nextInt(7)

@@ -99,22 +99,6 @@ class StreamingOpsSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  /** With a PROCESSING-time timeout armed, the engine self-schedules
-    * timer-check batches whose advancing clock epoch keeps
-    * `processAllAvailable` from ever latching "no new data" — so these
-    * cases poll the sink with a deadline instead of blocking.
-    */
-  // Deadline 300 s (was 90): sized for a CONTENDED box, not an idle one —
-  // the r18 driver's test pass went red under sustained host load
-  // (VERIFY_r18), and processing-time timeouts fire on engine-scheduled
-  // timer batches whose latency scales with ambient CPU pressure. The
-  // deadline exists to bound a genuine hang, not to race the scheduler.
-  private def pollUntil(cond: => Boolean, timeoutSec: Int = 300): Boolean = {
-    val deadline = System.nanoTime() + timeoutSec * 1000L * 1000 * 1000
-    while (!cond && System.nanoTime() < deadline) Thread.sleep(100)
-    cond
-  }
-
   test("sliding windows assign events to overlapping windows") {
     val ev = Seq(("2024-01-01 10:07:00", "click", 1.0))
       .toDF("ts_s", "event_type", "value")

@@ -167,7 +167,7 @@ class AnalysisFuzzSpec extends SparkSpec {
         (id, toks(t).sliding(2).filter(_.size == 2)
           .map(_.mkString(" ")).toVector)
       }
-      val gramDocs = docGrams.flatMap { case (id, gs) => gs.distinct.map(g => g) }
+      val gramDocs = docGrams.flatMap { case (_, gs) => gs.distinct }
         .groupBy(identity).view.mapValues(_.size).toMap
       val wantX = docGrams.map { case (id, gs) =>
         val total = gs.size.toLong

@@ -25,7 +25,7 @@ class BpeSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
     val docs = Seq("low low lower newest newest widest").toDF("text")
     assert(Bpe.train(docs, "text", nMerges = 3, minCount = 1L).merges.size == 3)
-    val fresh = sc.getPersistentRDDs.keySet -- before
+    val fresh = sc.getPersistentRDDs.keySet.toSet -- before
     assert(fresh.isEmpty, s"persistent RDDs left by train: $fresh")
   }
 

@@ -440,7 +440,7 @@ class CorpusAssemblySpec extends SparkSpec {
     val df = Seq((1L, "a"), (1L, "b"), (2L, "b"), (2L, "c"), (3L, "d"))
       .toDF("doc", "feat")
     val out = CorpusAssembly.greedyCoverSelect(df, k = 4)
-    val fresh = sc.getPersistentRDDs.keySet -- before
+    val fresh = sc.getPersistentRDDs.keySet.toSet -- before
     val resultRdds = out.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
     }

@@ -3,7 +3,6 @@ package graft.text
 import scala.util.Random
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Randomized differentials for the corpus-hygiene text operators
   * against independent local folds: n-gram contamination pairs and the
