@@ -6,15 +6,15 @@ import org.apache.spark.sql.types.StructType
 /** Loaders for the driver-generated parquet test tables (TESTDATA.md).
   *
   * All engine queries read through here: parquet scans get Catalyst's
-  * filter pushdown + column pruning for free, and graft's native functions
-  * are registered on first touch of a session.
+  * filter pushdown + column pruning for free.
   *
   * Precondition: the session was built by [[Session.builder]] (or carries
   * its confs), so it runs in the UTC zone with
   * `spark.sql.legacy.parquet.nanosAsLong` on. Loading changes no session
-  * conf. The zone makes the events TIMESTAMP_NTZ → TIMESTAMP cast below
-  * value-preserving regardless of the host's default zone; `nanosAsLong`
-  * lets a TIMESTAMP(NANOS) column be read at all.
+  * state: no conf, no function. The zone makes the events TIMESTAMP_NTZ
+  * → TIMESTAMP cast below value-preserving regardless of the host's
+  * default zone; `nanosAsLong` lets a TIMESTAMP(NANOS) column be read at
+  * all.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -33,7 +33,6 @@ object Tables {
   private val schemas = new SnapshotMemoizer[StructType]
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    GraftFunctions.register(spark)
     val path = s"$sfDir/$table.parquet"
     val schema = schemas.get(
         s"${GraftSqlBridge.sessionId(spark)}|$path", snapshotId(spark, sfDir, table)) {

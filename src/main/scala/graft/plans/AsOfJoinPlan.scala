@@ -12,9 +12,8 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 
 /** Whole-operator as-of join through the full Catalyst extension surface —
   * the project brief's preference (c): a custom LogicalPlan node, a
-  * SparkStrategy lowering it, and a physical SparkPlan, registered via
-  * SparkSessionExtensions (GraftExtensions) or per-session
-  * (GraftSqlBridge.ensureStrategy).
+  * SparkStrategy lowering it, and a physical SparkPlan, installed into
+  * each session that builds the node (GraftSqlBridge.ensureStrategy).
   *
   * Why a physical operator when ops.AsOfJoin already composes the same
   * semantics from union + window: the union form shuffles |L|+|R| rows into
@@ -60,9 +59,8 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner strategy: AsOfJoinNode → AsOfJoinExec. Registered by
-  * [[graft.GraftExtensions]] (spark.sql.extensions) and injected
-  * per-session by ops.AsOfJoin through GraftSqlBridge.ensureStrategy.
+/** Planner strategy: AsOfJoinNode → AsOfJoinExec. Injected per-session
+  * by ops.AsOfJoin through GraftSqlBridge.ensureStrategy.
   */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -1,6 +1,6 @@
 package graft.sketch
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Mergeable-sketch aggregation — the cardinality pattern that replaces
@@ -21,16 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** Approximate distinct values of `valueCol` per group. `lgK` trades
-    * size for accuracy (12 → ~1.6% rse, 4 KB per sketch).
-    */
-  def approxDistinct(
-      df: DataFrame, groupCols: Seq[String], valueCol: String,
-      lgK: Int = 12): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(hll_sketch_estimate(
-        hll_sketch_agg(col(valueCol), lit(lgK))).as("approx_distinct"))
-
   /** Two-level sketch rollup: per-(group, subgroup) sketches, then the
     * per-group totals by MERGING the subgroup sketches — the reusable
     *-aggregate shape (daily sketches → monthly totals) that makes
@@ -39,7 +29,8 @@ object Sketches {
     * estimate, is_total=true). The explicit `is_total` marker — not the
     * NULL subgroup — identifies rollup rows: input data whose subgroup
     * VALUE is null would otherwise be indistinguishable from the total
-    * (the same reason SQL has grouping_id()).
+    * (the same reason SQL has grouping_id()). `lgK` trades size for
+    * accuracy (12 → ~1.6% rse, 4 KB per sketch).
     */
   def rollupDistinct(
       df: DataFrame, groupCol: String, subCol: String, valueCol: String,
@@ -265,8 +256,7 @@ object Sketches {
     // Digest d carries addresses 4d .. 4d+3, as in bloomBits.
     val member = (0 until (kh + 3) / 4).map { d =>
       val digest = md5(concat(lit(s"bl$d:"), col(keyCol).cast("string")))
-      GraftSqlBridge.column(graft.expr.BloomMember(
-        GraftSqlBridge.expression(digest), words, math.min(4, kh - 4 * d), mBits))
+      graft.GraftFunctions.bloomMember(digest, words, math.min(4, kh - 4 * d), mBits)
     }.reduce(_ && _)
     df.filter(col(keyCol).isNotNull && member)
   }
@@ -274,7 +264,7 @@ object Sketches {
   /** HyperLogLog (Flajolet et al. '07) as a DETERMINISTIC register
     * relation — the third leg of the mergeable-sketch family (Count-Min =
     * frequency, Bloom = membership, HLL = cardinality). Unlike the
-    * DataSketches-backed [[approxDistinct]], whose estimates shift with
+    * DataSketches-backed [[rollupDistinct]], whose estimates shift with
     * the partial-merge tree (HIP vs composite estimator), this spelled-out
     * form is bit-stable end-to-end and therefore HASH-ORACLED: register
     * addresses and rank bits come from seeded md5 ("hll:" — the

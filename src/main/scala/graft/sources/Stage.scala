@@ -33,7 +33,6 @@ object Stage {
       df: DataFrame, path: String, colA: String, colB: String,
       partitions: Int = 0): Unit = {
     import org.apache.spark.sql.functions._
-    graft.GraftFunctions.register(df.sparkSession) // z_order2 resolution
     val bounds = df.agg(
       min(col(colA)).cast("double"), max(col(colA)).cast("double"),
       min(col(colB)).cast("double"), max(col(colB)).cast("double"))

@@ -56,8 +56,6 @@ object Bpe {
   def train(docs: DataFrame, textCol: String, nMerges: Int,
       minCount: Long = 2L): Model = {
     require(nMerges >= 1, "bpe needs at least one merge")
-    val spark = docs.sparkSession
-    GraftFunctions.register(spark)
     var state = wordTypes(docs, textCol)
       .select(col("w"), col("cnt"), split(col("w"), "").as("syms"))
       .localCheckpoint(true)

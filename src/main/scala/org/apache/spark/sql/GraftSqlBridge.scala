@@ -6,21 +6,21 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils,
 
 /** The `private[sql]` doorways this library uses: wrap a custom
   * [[LogicalPlan]] (graft.plans.AsOfJoinNode) in a DataFrame or a native
-  * expression in a Column, and read a session's id. Spark's
-  * supported extension points (SparkSessionExtensions) let third parties
-  * inject rules/strategies but expose no public constructor from a logical
-  * plan to a DataFrame, so every library shipping its own plan node hosts
-  * a shim like this inside the `org.apache.spark.sql` package.
+  * expression in a Column, and read a session's id. Spark's public API
+  * has no constructor from a logical plan to a DataFrame, nor from a
+  * Catalyst expression to a Column, so every library shipping its own
+  * plan node or expression hosts a shim like this inside the
+  * `org.apache.spark.sql` package.
   */
 object GraftSqlBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
 
-  /** Wrap a native expression that holds driver-side state (the Bloom
-    * bitmap of graft.expr.BloomMember) in a Column directly: passed
-    * through `call_function`, that state would have to enter the plan as
-    * a literal argument and be printed with every plan string.
+  /** Wrap a native expression in a Column (graft.GraftFunctions builds
+    * every native Column through this). Typed arguments and driver-side
+    * state (a WordPiece vocab, the Bloom bitmap of graft.expr.BloomMember)
+    * ride the expression itself, never a literal argument of the plan.
     */
   def column(e: Expression): Column = ExpressionUtils.column(e)
 

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Session]]'s conf-list parser, and the structure it keeps: session
-  * building, job listening and session-conf writes each live in one place,
-  * and every public `def` of the engine has a caller in the engine.
+  * building, job listening, session-conf writes and native Columns each
+  * live in one place, no code touches a function registry, and every
+  * public `def` of the engine has a caller in the engine.
   */
 class SessionSpec extends AnyFunSuite {
 
@@ -47,6 +48,13 @@ class SessionSpec extends AnyFunSuite {
       Set("src/main/scala/graft/graph/Iterate.scala"))
   }
 
+  test("native expressions reach a plan only as Columns built in GraftFunctions") {
+    val main = sources("src/main/scala")
+    assert(holders(main, """\b(functionRegistry|injectFunction|SparkSessionExtensions)\b""").isEmpty)
+    assert(holders(main ++ sources("src/test/scala"), """GraftSqlBridge\s*\.\s*column\b""") ==
+      Set("src/main/scala/graft/GraftFunctions.scala"))
+  }
+
   /** Public defs that no code in `src/main` calls, each with the reason
     * it stays. A def missing from here and from every `src/main` call
     * site is a second path nothing runs: delete it or give it a reason.
@@ -66,8 +74,7 @@ class SessionSpec extends AnyFunSuite {
     "compact" -> "sink-side layout pass (Stage); StageSpec pins its output",
     "computeStrings" -> "test reference: the driver-side SimHash64 the expression is checked against",
     "quantizedCosine" -> "test reference: the inline cosine quantizedNorm's hoisted form must equal",
-    "simhashArrangement" -> "capacity-planning view of simhashPairs' tables; DedupSpec pins the math",
-    "approxDistinct" -> "test reference: SketchesSpec pins the HLL error bounds through it")
+    "simhashArrangement" -> "capacity-planning view of simhashPairs' tables; DedupSpec pins the math")
 
   test("every public def in src/main has a caller there or a reason to stay") {
     val files = sources("src/main/scala")

@@ -14,7 +14,6 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(s)
     s
   }
 }

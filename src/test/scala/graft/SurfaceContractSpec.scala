@@ -27,13 +27,18 @@ object SurfaceContractSpec {
       confBefore: Map[String, String],
       confAfter: Map[String, String],
       viewsBefore: Set[String],
-      viewsAfter: Set[String])
+      viewsAfter: Set[String],
+      functionsBefore: Set[String],
+      functionsAfter: Set[String],
+      buildMs: Long,
+      factsMs: Long)
 }
 
 /** The whole-surface contracts: properties every registered query must
   * hold, read off ONE build of each query at sf0.001. The sweep keeps
   * plain facts per query (class names, column strings, counts, the
-  * session's conf and temp views around the build), never the DataFrame,
+  * session's conf, temp views and functions around the build, and the
+  * wall time of the build and of the facts), never the DataFrame,
   * and each test below reads those facts. A query whose build throws
   * fails every test that needs it, by name.
   *
@@ -50,11 +55,7 @@ class SurfaceContractSpec extends SparkSpec {
     */
   private val totalOrderBespoke = Set("q_scd2")
 
-  private lazy val session: SparkSession = {
-    val s = spark.newSession()
-    GraftFunctions.register(s)
-    s
-  }
+  private lazy val session: SparkSession = spark.newSession()
 
   /** Topmost global Sort, looking through order-preserving nodes. */
   private def topSort(plan: LogicalPlan): Option[Seq[SortOrder]] = plan match {
@@ -124,6 +125,9 @@ class SurfaceContractSpec extends SparkSpec {
   private def tempViews(s: SparkSession): Set[String] =
     s.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
+  private def functions(s: SparkSession): Set[String] =
+    s.sessionState.functionRegistry.listFunction().map(_.unquotedString).toSet
+
   /** One build per registered query, in name order: its facts, or the
     * message of what its build threw.
     */
@@ -131,11 +135,17 @@ class SurfaceContractSpec extends SparkSpec {
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val confBefore = session.conf.getAll
       val viewsBefore = tempViews(session)
+      val functionsBefore = functions(session)
       val facts =
         try {
+          val t0 = System.nanoTime()
           val df = fn(session, sf001)
-          Right(Facts(nondeterministic(df), complexCols(df.schema), orderFacts(df),
-            confBefore, session.conf.getAll, viewsBefore, tempViews(session)))
+          val t1 = System.nanoTime()
+          val f = Facts(nondeterministic(df), complexCols(df.schema), orderFacts(df),
+            confBefore, session.conf.getAll, viewsBefore, tempViews(session),
+            functionsBefore, functions(session),
+            (t1 - t0) / 1000000, (System.nanoTime() - t1) / 1000000)
+          Right(f)
         } catch {
           case NonFatal(e) => Left(s"build threw ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
@@ -237,5 +247,29 @@ class SurfaceContractSpec extends SparkSpec {
         s"; dropped ${(f.viewsBefore -- f.viewsAfter).toSeq.sorted.mkString(",")}")
     }
     assert(leaks.isEmpty, s"queries that changed the session's temp views:\n${listing(leaks)}")
+  }
+
+  test("every query leaves the session's function registry as it found it") {
+    // A function a query registers outlives the run in the session's
+    // registry; native expressions reach a plan as Columns instead.
+    val leaks = offenders(_ => true) { f =>
+      if (f.functionsAfter == f.functionsBefore) None
+      else Some(s"added ${(f.functionsAfter -- f.functionsBefore).toSeq.sorted.mkString(",")}" +
+        s"; dropped ${(f.functionsBefore -- f.functionsAfter).toSeq.sorted.mkString(",")}")
+    }
+    assert(leaks.isEmpty,
+      s"queries that changed the session's function registry:\n${listing(leaks)}")
+  }
+
+  test("reports the sweep's 10 slowest query builds") {
+    // Where the sweep's time goes: the build (table loads, eager jobs,
+    // graph loops, stream replays) and the facts (the final sort's
+    // distinct-row count). A report only; nothing here is a budget.
+    val timed = surface.collect { case (q, Right(f)) => (q, f.buildMs, f.factsMs) }
+    info(s"${timed.size} builds: ${timed.map(_._2).sum} ms build, " +
+      s"${timed.map(_._3).sum} ms facts")
+    timed.sortBy { case (q, b, fm) => (-(b + fm), q) }.take(10).foreach {
+      case (q, b, fm) => info(s"$q: build $b ms, facts $fm ms")
+    }
   }
 }

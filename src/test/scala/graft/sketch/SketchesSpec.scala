@@ -10,11 +10,15 @@ class SketchesSpec extends SparkSpec {
     (if (i % 2 == 0) "a" else "b", s"sub${i % 4}", s"v${i % 1237}")
   }.toDF("grp", "sub", "v")
 
+  /** The merged per-group estimates: `rollupDistinct`'s `is_total` rows. */
+  private def totals(in: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    Sketches.rollupDistinct(in, "grp", "sub", "v").filter($"is_total")
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+
   test("approxDistinct lands within HLL error bounds of the exact count") {
     val exact = df.groupBy("grp").agg(countDistinct($"v").as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val approx = Sketches.approxDistinct(df, Seq("grp"), "v")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val approx = totals(df)
     for ((g, n) <- exact) {
       val a = approx(g).toDouble
       assert(math.abs(a - n) / n < 0.05, s"group $g: approx $a vs exact $n")
@@ -26,10 +30,7 @@ class SketchesSpec extends SparkSpec {
     // estimators, so partitioning shifts estimates a little. The contract
     // is the error bound, and that the spread is far tighter than it.
     val exact = df.select($"v").distinct().count().toDouble
-    val runs = Seq(1, 3, 13).map { p =>
-      Sketches.approxDistinct(df.repartition(p), Seq("grp"), "v")
-        .orderBy("grp").collect().map(_.getLong(1)).toSeq
-    }
+    val runs = Seq(1, 3, 13).map(p => totals(df.repartition(p)).toSeq.sorted.map(_._2))
     for (r <- runs; e <- r) assert(math.abs(e - exact) / exact < 0.05, runs)
     val spread = runs.flatten.max - runs.flatten.min
     assert(spread < exact * 0.02, s"spread $spread too wide: $runs")
@@ -37,9 +38,9 @@ class SketchesSpec extends SparkSpec {
 
   test("rollupDistinct: merged coarse estimate tracks the direct estimate") {
     val out = Sketches.rollupDistinct(df, "grp", "sub", "v")
-    val merged = out.filter($"is_total")
-      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
-    val direct = Sketches.approxDistinct(df, Seq("grp"), "v")
+    val merged = totals(df)
+    val direct = df.groupBy("grp")
+      .agg(hll_sketch_estimate(hll_sketch_agg($"v", lit(12))))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     for ((g, d) <- direct) // merge loses nothing beyond estimator jitter
       assert(math.abs(merged(g) - d).toDouble / d < 0.02, s"$g: ${merged(g)} vs $d")
